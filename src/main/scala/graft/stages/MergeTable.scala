@@ -27,6 +27,16 @@ import org.apache.spark.sql.types.StructType
   * from the last committed version (restartability — what the in-memory
   * round-1 sink lacked). On object stores without atomic rename this flip
   * maps onto the store's conditional-put, exactly as Delta's LogStore does.
+  *
+  * A version directory holds the parquet data files plus two sidecars,
+  * staged with the data and promoted by the same atomic move: `_STATS`
+  * (per-file footer stats, [[graft.lake.StatsManifest]]) and `_SCHEMA`
+  * (the written DataFrame schema as JSON, DataFrame commits only). Spark's
+  * file index skips both by their `_` prefix. Readers use `_SCHEMA` so
+  * opening a version submits no schema-inference job, and fall back to
+  * parquet inference when it is missing (older versions,
+  * [[commitStagedFiles]] versions, shallow clones) — as `_STATS` readers
+  * fall back to footer reads.
   */
 final class MergeTable(val root: String, keys: Seq[String],
                        lockStaleMs: Long = MergeTable.DefaultLockStaleMs) {
@@ -40,7 +50,19 @@ final class MergeTable(val root: String, keys: Seq[String],
     else None
 
   private def currentData(spark: SparkSession): Option[DataFrame] =
-    currentVersion.map(v => spark.read.parquet(Paths.get(root, v).toString))
+    currentVersion.map(scanVersion(spark, _))
+
+  /** THE read of one version directory: with the schema its commit
+    * recorded in `_SCHEMA` when present (no Spark job to infer it from a
+    * footer), by parquet inference otherwise.
+    */
+  private def scanVersion(spark: SparkSession, version: String): DataFrame = {
+    val dir = Paths.get(root, version)
+    MergeTable.recordedSchema(dir) match {
+      case Some(schema) => spark.read.schema(schema).parquet(dir.toString)
+      case None         => spark.read.parquet(dir.toString)
+    }
+  }
 
   def read(spark: SparkSession, schemaIfEmpty: StructType): DataFrame =
     currentData(spark).getOrElse(
@@ -52,7 +74,7 @@ final class MergeTable(val root: String, keys: Seq[String],
     * `versionAsOf` exposes.
     */
   def readVersion(spark: SparkSession, version: String): DataFrame =
-    spark.read.parquet(Paths.get(root, version).toString)
+    scanVersion(spark, version)
 
   /** Small-file compaction: rewrite the CURRENT version into `numFiles`
     * parquet files as a new commit — same rows, fewer files; the
@@ -251,7 +273,7 @@ final class MergeTable(val root: String, keys: Seq[String],
     val v = currentVersion.getOrElse(throw new IllegalStateException(
       s"MergeTable $root: DELETE on an empty table (no committed version)"))
     import org.apache.spark.sql.functions.col
-    spark.read.parquet(Paths.get(root, v).toString)
+    scanVersion(spark, v)
       .filter(pred)
       .select(col("_metadata.file_path").as("file"),
         col("_metadata.row_index").as("pos"))
@@ -273,7 +295,7 @@ final class MergeTable(val root: String, keys: Seq[String],
     currentVersion match {
       case None => read(spark, schemaIfEmpty)
       case Some(v) =>
-        val data = spark.read.parquet(Paths.get(root, v).toString)
+        val data = scanVersion(spark, v)
         if (!Files.exists(dvPath(v))) data
         else {
           import org.apache.spark.sql.functions.{broadcast, col, substring_index}
@@ -324,8 +346,7 @@ final class MergeTable(val root: String, keys: Seq[String],
     val (v, tableRows, dvRows) = currentVersion match {
       case None => ("", 0L, 0L)
       case Some(ver) =>
-        val rows = manifestRowCount(ver).getOrElse(
-          spark.read.parquet(Paths.get(root, ver).toString).count())
+        val rows = manifestRowCount(ver).getOrElse(scanVersion(spark, ver).count())
         val dv = if (Files.exists(dvPath(ver)))
           spark.read.parquet(dvPath(ver).toString)
             .select(org.apache.spark.sql.functions.substring_index(
@@ -498,17 +519,19 @@ final class MergeTable(val root: String, keys: Seq[String],
     // (one file for the registry's small fixture tables instead of 32
     // writer-inits ~100 ms each; still parallel, size-split at scale).
     // Conf-off for callers that pre-partition deliberately.
-    val out0 = merge(base.map(v => spark.read.parquet(Paths.get(root, v).toString)))
+    val out0 = merge(base.map(scanVersion(spark, _)))
     // callers that partition their output DELIBERATELY (compact's file
     // count / clustering, reconcileDeletes' numFiles) pass
     // sizeOutput = false — a rebalance would override their layout
     val out = if (sizeOutput && spark.conf.getOption("graft.merge.optimizeWrite")
         .forall(_.toBoolean)) out0.hint("rebalance") else out0
     out.write.mode("overwrite").parquet(stage.toString)
-    // per-file stats manifest, staged WITH the data (the atomic move below
-    // carries it into the version): a DataFrame commit rewrites every file,
-    // so each gets its one-and-only footer read here — outside the lock
+    // per-file stats manifest and the written schema, staged WITH the data
+    // (the atomic move below carries them into the version): a DataFrame
+    // commit rewrites every file, so each gets its one-and-only footer
+    // read here — outside the lock
     writeStatsManifest(stage, carried = Map.empty)
+    MergeTable.recordSchema(stage, out.schema)
     val lock = Paths.get(root, "_COMMIT_LOCK")
     try {
       acquireCommitLock(lock, token)
@@ -891,6 +914,31 @@ object MergeTable {
     * the 5% ratio, but their read tax still accrues per scan).
     */
   val DvScanDeadline: Long = 16L
+
+  /** The schema sidecar of a version written by a DataFrame commit. */
+  val SchemaFile = "_SCHEMA"
+
+  /** Stage `schema` as the `_SCHEMA` sidecar of a version directory.
+    * Best-effort, like `_STATS`: readers infer the schema when the file is
+    * missing, so failing to write it must not fail the commit.
+    */
+  private def recordSchema(versionDir: Path, schema: StructType): Unit =
+    try Files.write(versionDir.resolve(SchemaFile), schema.json.getBytes(StandardCharsets.UTF_8))
+    catch { case scala.util.control.NonFatal(_) => () }
+
+  /** The schema a version's commit recorded, or None when the sidecar is
+    * absent or unparsable (then callers infer it from the parquet footers).
+    */
+  def recordedSchema(versionDir: Path): Option[StructType] =
+    try {
+      val p = versionDir.resolve(SchemaFile)
+      if (!Files.exists(p)) None
+      else org.apache.spark.sql.types.DataType.fromJson(
+        new String(Files.readAllBytes(p), StandardCharsets.UTF_8)) match {
+        case st: StructType => Some(st)
+        case _              => None
+      }
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** `v<n>` with a non-empty all-digit suffix. */
   def isVersionName(name: String): Boolean =

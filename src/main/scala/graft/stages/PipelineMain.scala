@@ -20,10 +20,12 @@ import org.apache.spark.sql.types._
   *     S1/S2 extraction boundary (a production deployment points this at
   *     [[graft.sources.PagedJsonSource]]; the driver corpus stands in
   *     here);
-  *   - `stg_to_dds <warehouse>` — the watermark-incremental
-  *     [[Pipeline.incrementalLoad]]: dims merged (SCD1/SCD0 with stable
-  *     surrogate ids), facts insert-ignored, CHECK violations quarantined,
-  *     and the cursor advanced ONLY after the fact commit
+  *   - `stg_to_dds <warehouse>` — the watermark-incremental load
+  *     ([[Pipeline.prepareIncrement]]): the dims commit this increment's
+  *     rows only (SCD1 courier upsert, SCD0 timestamp insert, stable
+  *     surrogate ids), the facts are resolved against the dim versions
+  *     just committed and insert-ignored, CHECK violations are
+  *     quarantined, and the cursor advances ONLY after the fact commit
   *     (write-then-advance, SURVEY.md §7.3);
   *   - `ledger_update <warehouse>` — the full-recompute
   *     [[Pipeline.ledgerRebuild]] upserted into `cdm/ledger`.
@@ -93,12 +95,17 @@ object PipelineMain {
     t(warehouse, "stg/deliveries", "delivery_key").insertIgnore(deliveries)
   }
 
-  /** `stg_to_dds`: one watermark increment against durable DDS state. */
+  /** `stg_to_dds`: one watermark increment against durable DDS state.
+    *
+    * Each piece of work runs once: the dims commit delta rows (never their
+    * full state), and the facts resolve against the dim versions this run
+    * committed — a read of those versions, not a re-run of the dim
+    * lineages. A crash between the commits replays safely: the dim merges
+    * are idempotent, so the re-run resolves the same ids.
+    */
   def stgToDds(spark: SparkSession, warehouse: String): Unit = {
-    val dds = Pipeline.DdsState(
-      read(spark, warehouse, "dds/dm_couriers", dmCourierSchema, "courier_key"),
-      read(spark, warehouse, "dds/dm_timestamps", dmTimestampSchema, "ts"),
-      read(spark, warehouse, "dds/fct_deliveries", fctSchema, "delivery_key"))
+    val dmCouriers = t(warehouse, "dds/dm_couriers", "courier_key")
+    val dmTimestamps = t(warehouse, "dds/dm_timestamps", "ts")
     val wm = State.readWatermark(spark, s"$warehouse/state/wf", WorkflowKey,
       Pipeline.coldStartWatermark)
     // stage boundary: the load runs ~6 actions over the parsed increment;
@@ -110,10 +117,10 @@ object PipelineMain {
     // (Dataset.observe): at 100 TB a separate agg(max)/isEmpty pass over
     // the increment is a second full scan for two scalars
     val obs = org.apache.spark.sql.Observation(s"parsed_increment_$WorkflowKey")
-    StgToDds.parseDeliveries(
-        read(spark, warehouse, "stg/deliveries", stgDeliverySchema, "delivery_key")
-          .filter(col("delivery_ts") > lit(wm)))
-      .observe(obs, max(col("ts")).as("max_ts"), count(lit(1)).as("n_rows"))
+    val parse = StgToDds.parseDeliveries(
+      read(spark, warehouse, "stg/deliveries", stgDeliverySchema, "delivery_key")
+        .filter(col("delivery_ts") > lit(wm)))
+    parse.observe(obs, max(col("ts")).as("max_ts"), count(lit(1)).as("n_rows"))
       .write.mode("overwrite").parquet(parsedDir)
     val incrementMaxTs = Option(obs.get("max_ts"))
       .map(_.asInstanceOf[java.sql.Timestamp])
@@ -139,32 +146,42 @@ object PipelineMain {
       if (counts.exists(_ < 0L)) obs.get("n_rows").asInstanceOf[Long]
       else counts.sum
     }
-    val parsed = spark.read.parquet(parsedDir)
-    val dmOrders = read(spark, warehouse, "dds/dm_orders", dmOrderSchema, "order_key")
+    // read back with the parse schema, known before the write: no job to
+    // infer it from a footer
+    val parsed = spark.read.schema(parse.schema).parquet(parsedDir)
+    val dmOrdersTable = t(warehouse, "dds/dm_orders", "order_key")
+    val dmOrders = dmOrdersTable.read(spark, dmOrderSchema)
     // misconfiguration guard: an unseeded order dim would inner-join every
     // fact away AND advance the cursor — silently consuming the increment
-    // forever. Fail loudly instead.
-    if (dmOrders.isEmpty && incrementRows > 0)
+    // forever. Fail loudly instead. The row count comes from the version's
+    // _STATS manifest (metadata, no job); a scan answers when it is missing.
+    val dmOrdersEmpty = dmOrdersTable.currentVersion.forall(v =>
+      dmOrdersTable.manifestRowCount(v).map(_ == 0L).getOrElse(dmOrders.isEmpty))
+    if (dmOrdersEmpty && incrementRows > 0)
       throw new IllegalStateException(
         s"$warehouse/dds/dm_orders is empty but the increment is not — seed the " +
           "pre-existing order dimension (PipelineMain.seedOrders) before loading facts")
-    val result = Pipeline.incrementalLoadParsed(parsed,
+    val inc = Pipeline.prepareIncrement(parsed,
       read(spark, warehouse, "stg/couriers", stgCourierSchema, "courier_key"),
-      dmOrders, dds, maxTsHint = Some(incrementMaxTs))
-    // dims merged by BUSINESS KEY (dim-sized full states); facts commit
-    // ONLY this increment's rows — an O(increment) incoming side
-    t(warehouse, "dds/dm_couriers", "courier_key").upsert(result.dds.dmCouriers)
-    t(warehouse, "dds/dm_timestamps", "ts").upsert(result.dds.dmTimestamps)
-    t(warehouse, "dds/fct_deliveries", "delivery_key").insertIgnore(result.newFacts)
+      dmCouriers.read(spark, dmCourierSchema), dmTimestamps.read(spark, dmTimestampSchema),
+      maxTsHint = Some(incrementMaxTs))
+    // dims first, merged by BUSINESS KEY with O(increment) incoming sides
+    dmCouriers.upsert(inc.couriers)
+    dmTimestamps.insertIgnore(inc.timestamps)
+    // facts resolve against exactly what was just committed, and commit
+    // ONLY this increment's rows
+    val newFacts = StgToDds.resolveFacts(inc.deliveries, dmOrders,
+      dmTimestamps.read(spark, dmTimestampSchema), dmCouriers.read(spark, dmCourierSchema))
+    t(warehouse, "dds/fct_deliveries", "delivery_key").insertIgnore(newFacts)
     // quarantine idempotence cannot key on delivery_key (the rows this
     // table exists for may have it NULL): key on a deterministic row
     // digest so a crash-replay upserts, never duplicates
-    val quarantined = result.quarantined.withColumn("_q_key",
-      md5(to_json(struct(result.quarantined.columns.map(col): _*))))
+    val quarantined = inc.quarantined.withColumn("_q_key",
+      md5(to_json(struct(inc.quarantined.columns.map(col): _*))))
     if (!quarantined.isEmpty)
       t(warehouse, "dds/quarantine", "_q_key").upsert(quarantined)
     // the cursor advances LAST — a crash above replays into idempotent merges
-    State.advanceWatermark(spark, s"$warehouse/state/wf", WorkflowKey, result.watermark)
+    State.advanceWatermark(spark, s"$warehouse/state/wf", WorkflowKey, inc.watermark)
   }
 
   /** `ledger_update`: DDS → CDM full recompute, upserted by the mart key. */

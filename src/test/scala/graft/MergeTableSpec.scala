@@ -291,6 +291,71 @@ class MergeTableSpec extends AnyFunSuite {
       "no lock may survive the stress")
   }
 
+  test("_SCHEMA: every DataFrame commit records its schema; reads use it with zero jobs") {
+    import spark.implicits._
+    val t = MergeTable.scratch(Seq("k"))
+    t.upsert(Seq(("a", 1), ("b", 2)).toDF("k", "v"))                            // v0
+    t.insertIgnore(Seq(("b", 99), ("c", 3)).toDF("k", "v"))                     // v1
+    t.replace(t.read(spark, new StructType()).where("k <> 'a'"))                // v2
+    t.compact(spark)                                                            // v3
+    t.upsert(Seq(("d", 4, "x")).toDF("k", "v", "w"), evolveSchema = true)       // v4
+    val versions = Seq("v0", "v1", "v2", "v3", "v4")
+    assert(t.listVersions == versions)
+    versions.foreach { v =>
+      val dir = Paths.get(t.root, v)
+      val recorded = MergeTable.recordedSchema(dir)
+      assert(recorded.isDefined, s"$v has no _SCHEMA")
+      // the recorded schema reads exactly as parquet inference would
+      assert(spark.read.schema(recorded.get).parquet(dir.toString).schema ==
+        spark.read.parquet(dir.toString).schema, v)
+      // and it stays out of the version's data files
+      assert(t.dataFiles(v).forall(_.getFileName.toString.startsWith("part-")), v)
+    }
+    assert(MergeTable.recordedSchema(Paths.get(t.root, "v3")).get.fieldNames.toSeq == Seq("k", "v"))
+    assert(MergeTable.recordedSchema(Paths.get(t.root, "v4")).get.fieldNames.toSeq ==
+      Seq("k", "v", "w"))
+    // opening a recorded version submits no Spark job (no footer inference)
+    val (_, jobs) = SparkJobs.during(spark) {
+      t.read(spark, new StructType())
+      versions.foreach(t.readVersion(spark, _))
+    }
+    assert(jobs.isEmpty, s"reads of recorded versions submitted jobs: $jobs")
+    assert(t.readVersion(spark, "v4").orderBy("k").collect().map(r =>
+      (r.getString(0), r.getInt(1), Option(r.getString(2)))).toSeq ==
+      Seq(("b", 2, None), ("c", 3, None), ("d", 4, Some("x"))))
+  }
+
+  test("_SCHEMA: versions without it read by inference — staged commits, clones, older trees") {
+    import spark.implicits._
+    val t = MergeTable.scratch(Seq("k"))
+    t.upsert(Seq(("a", 1), ("b", 2)).toDF("k", "v"))                            // v0
+    // a commitStagedFiles version carries data files and _STATS only
+    val staged = Paths.get(t.root, "_stage_spec")
+    Seq(("c", 3)).toDF("k", "v").write.parquet(staged.toString)
+    assert(t.commitStagedFiles(staged, carryForward = true) == "v1")
+    assert(MergeTable.recordedSchema(Paths.get(t.root, "v1")).isEmpty)
+    val (_, inferJobs) = SparkJobs.during(spark)(t.read(spark, new StructType()))
+    assert(inferJobs.nonEmpty && inferJobs.forall(_.executionId.isEmpty),
+      s"a version without _SCHEMA is opened by footer inference: $inferJobs")
+    assert(rows(t) == Seq(("a", 1), ("b", 2), ("c", 3)))
+    // a shallow clone links data files only
+    val clone = t.cloneShallow("v0", graft.stages.TempDirs.scratch("graft_schema_clone_"))
+    assert(MergeTable.recordedSchema(Paths.get(clone.root, "v0")).isEmpty)
+    assert(rows(clone) == Seq(("a", 1), ("b", 2)))
+    // a tree written before _SCHEMA existed reads unchanged, and its next
+    // DataFrame commit records one
+    val old = MergeTable.scratch(Seq("k"))
+    old.upsert(Seq(("a", 1)).toDF("k", "v"))
+    old.upsert(Seq(("b", 2)).toDF("k", "v"))
+    val before = (rows(old), old.readVersion(spark, "v0").schema)
+    old.listVersions.foreach(v =>
+      java.nio.file.Files.delete(Paths.get(old.root, v, MergeTable.SchemaFile)))
+    assert((rows(old), old.readVersion(spark, "v0").schema) == before)
+    old.upsert(Seq(("c", 3)).toDF("k", "v"))
+    assert(MergeTable.recordedSchema(Paths.get(old.root, "v2")).isDefined)
+    assert(rows(old) == Seq(("a", 1), ("b", 2), ("c", 3)))
+  }
+
   test("shallow clone: zero-copy fork, divergent isolation, survives source vacuum") {
     import spark.implicits._
     val src = MergeTable.scratch(Seq("k"))

@@ -83,28 +83,47 @@ class PipelineMainSpec extends AnyFunSuite {
     assert(e.getMessage.contains("dm_orders"))
   }
 
-  test("three-stage spark-submit chain: two days, replay, durable state, ledger") {
+  private val stages = Seq("load_stg", "stg_to_dds", "ledger_update")
+
+  /** The two-day fixture: a fresh warehouse seeded with three orders and a
+    * source directory holding day 1 (landed and run through `day1Stages`). */
+  private def twoDayFixture(day1Stages: Seq[String] = stages): (String, String) = {
     import spark.implicits._
     val wh = graft.stages.TempDirs.scratch("graft_pm_wh_")
     val src = graft.stages.TempDirs.scratch("graft_pm_src_")
     PipelineMain.seedOrders(spark, wh,
       Seq(("o1", 11, 1), ("o2", 12, 2), ("o3", 13, 3)).toDF("order_key", "id", "timestamp_id"))
-
-    // day 1
     writeSource(src, Seq("c1" -> "Ann", "c2" -> "Bob"), Seq(
       delivery("d1", "o1", "c1", "2024-05-01 11:00:00", 5, "100.00", "10.00"),
       delivery("d2", "o2", "c2", "2024-05-01 12:00:00", 3, "200.00", "0.00")))
-    Seq("load_stg", "stg_to_dds", "ledger_update").foreach(
-      PipelineMain.runStage(spark, _, wh, Some(src)))
-    assert(ledgerOf(wh)("Ann").getAs[Long]("orders_count") == 1L)
+    day1Stages.foreach(PipelineMain.runStage(spark, _, wh, Some(src)))
+    (wh, src)
+  }
 
-    // day 2: re-delivers d2, adds d3, renames c1 (SCD1) — a fresh source
-    // snapshot, the same durable warehouse
+  /** Day 2: re-delivers d2, adds d3, renames c1 (SCD1) — a fresh source
+    * snapshot for the same durable warehouse. */
+  private def writeDay2(src: String): Unit =
     writeSource(src, Seq("c1" -> "Ann Smith", "c2" -> "Bob"), Seq(
       delivery("d2", "o2", "c2", "2024-05-01 12:00:00", 3, "200.00", "0.00"),
       delivery("d3", "o3", "c1", "2024-05-02 09:30:00", 4, "300.00", "30.00")))
-    Seq("load_stg", "stg_to_dds", "ledger_update").foreach(
-      PipelineMain.runStage(spark, _, wh, Some(src)))
+
+  private def watermarkOf(wh: String): Timestamp =
+    graft.stages.State.readWatermark(spark, s"$wh/state/wf",
+      PipelineMain.WorkflowKey, graft.stages.Pipeline.coldStartWatermark)
+
+  /** A committed table's rows, columns in name order, rows sorted. */
+  private def contentOf(wh: String, rel: String): Seq[String] = {
+    val df = new graft.stages.MergeTable(s"$wh/$rel", Seq.empty)
+      .read(spark, new org.apache.spark.sql.types.StructType())
+    df.select(df.columns.sorted.map(col): _*).collect().map(_.toString).toSeq.sorted
+  }
+
+  test("three-stage spark-submit chain: two days, replay, durable state, ledger") {
+    val (wh, src) = twoDayFixture()
+    assert(ledgerOf(wh)("Ann").getAs[Long]("orders_count") == 1L)
+
+    writeDay2(src)
+    stages.foreach(PipelineMain.runStage(spark, _, wh, Some(src)))
 
     val ann = ledgerOf(wh)("Ann Smith")   // SCD1 rename reached the mart
     assert(ann.getAs[Long]("orders_count") == 2L)
@@ -112,13 +131,10 @@ class PipelineMainSpec extends AnyFunSuite {
     assert(ann.getAs[Double]("courier_reward_sum") == 388.0)  // floor 350 + 0.95*40
 
     // durable watermark: day-2 cursor survives "the JVM" (fresh read path)
-    assert(graft.stages.State.readWatermark(spark, s"$wh/state/wf",
-      PipelineMain.WorkflowKey, graft.stages.Pipeline.coldStartWatermark)
-      == ts("2024-05-02 09:30:00"))
+    assert(watermarkOf(wh) == ts("2024-05-02 09:30:00"))
 
     // full replay of day 2 (task retry): every merge idempotent, mart unchanged
-    Seq("load_stg", "stg_to_dds", "ledger_update").foreach(
-      PipelineMain.runStage(spark, _, wh, Some(src)))
+    stages.foreach(PipelineMain.runStage(spark, _, wh, Some(src)))
     val replayed = ledgerOf(wh)
     assert(replayed("Ann Smith").getAs[Long]("orders_count") == 2L)
     assert(replayed.size == 2)
@@ -126,4 +142,61 @@ class PipelineMainSpec extends AnyFunSuite {
     val fct = new graft.stages.MergeTable(fctDir, Seq.empty)
     assert(spark.read.parquet(s"$fctDir/${fct.currentVersion.get}").count() == 3)
   }
+
+  test("crash between the dim and fact commits: cursor holds, replay equals a clean run") {
+    val (clean, cleanSrc) = twoDayFixture()
+    writeDay2(cleanSrc)
+    stages.foreach(PipelineMain.runStage(spark, _, clean, Some(cleanSrc)))
+
+    val (wh, src) = twoDayFixture()
+    writeDay2(src)
+    PipelineMain.runStage(spark, "load_stg", wh, Some(src))
+    val day1Cursor = watermarkOf(wh)
+    // a live foreign writer holds the fact table: stg_to_dds commits both
+    // dims, then fails at the fact commit
+    val fct = new graft.stages.MergeTable(s"$wh/dds/fct_deliveries", Seq("delivery_key"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(fct.root, "_COMMIT_LOCK"),
+      "foreign-writer 0".getBytes("UTF-8"))
+    def dimVersions = Seq("dds/dm_couriers", "dds/dm_timestamps").map(rel =>
+      new graft.stages.MergeTable(s"$wh/$rel", Seq.empty).currentVersion)
+    val before = dimVersions
+    intercept[java.util.ConcurrentModificationException](
+      PipelineMain.runStage(spark, "stg_to_dds", wh, Some(src)))
+    assert(dimVersions.zip(before).forall { case (now, was) => now != was },
+      "both dims commit before the facts")
+    assert(contentOf(wh, "dds/dm_couriers").exists(_.contains("Ann Smith")))
+    assert(watermarkOf(wh) == day1Cursor, "a failed fact commit must not advance the cursor")
+
+    // the holder is known dead: repair and re-run the stage
+    assert(fct.breakLock())
+    Seq("stg_to_dds", "ledger_update").foreach(PipelineMain.runStage(spark, _, wh, Some(src)))
+    Seq("dds/dm_couriers", "dds/dm_timestamps", "dds/fct_deliveries").foreach { rel =>
+      assert(contentOf(wh, rel) == contentOf(clean, rel), rel)
+    }
+    assert(ledgerOf(wh).map { case (k, r) => k -> r.toSeq } ==
+      ledgerOf(clean).map { case (k, r) => k -> r.toSeq })
+    assert(watermarkOf(wh) == watermarkOf(clean))
+  }
+
+  test("job budget: a daily stg_to_dds submits no schema-inference job and stays in budget") {
+    val (wh, src) = twoDayFixture()
+    writeDay2(src)
+    PipelineMain.runStage(spark, "load_stg", wh, Some(src))
+    val (_, jobs) = SparkJobs.during(spark)(
+      PipelineMain.runStage(spark, "stg_to_dds", wh, Some(src)))
+    // a job outside any SQL execution is one submitted only to infer a
+    // schema from a parquet footer
+    assert(jobs.forall(_.executionId.isDefined),
+      s"jobs outside a SQL execution: ${jobs.filter(_.executionId.isEmpty)}")
+    assert(jobs.size <= PipelineMainSpec.StgToDdsJobBudget,
+      s"${jobs.size} jobs > budget ${PipelineMainSpec.StgToDdsJobBudget}: ${jobs.map(_.callSite)}")
+  }
+}
+
+object PipelineMainSpec {
+  /** Jobs one daily `stg_to_dds` may submit on the two-day fixture: the
+    * measured count (36) plus a 25% margin for plan changes across Spark
+    * patches. The full-state dim commits, re-running the dim lineages in the
+    * fact commit, or schema inference on each read each add 10+ jobs. */
+  val StgToDdsJobBudget: Int = 45
 }

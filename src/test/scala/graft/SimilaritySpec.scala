@@ -609,6 +609,17 @@ class SimilaritySpec extends AnyFunSuite {
       s"probing all cells over the filtered corpus is the pre-filter exact scan: ${fr.last}")
   }
 
+  test("nprobe report filtered arms: a label with no matching rows fails naming the label") {
+    // labels are vec_id % 3, so 7 matches nothing: every filtered arm would
+    // grade 0 hits against 0 truth rows (NaN recall) without the guard
+    val e = intercept[IllegalArgumentException] {
+      Similarity.ivfNprobeReport(spark, embLabeled, numQueries = 8, k = 2,
+        centroids = 4, iters = 2, nprobes = Seq(1),
+        filteredLabel = Some(7), filteredNprobes = Seq(1, 4))
+    }
+    assert(e.getMessage.contains("filteredLabel=7 matches no corpus row"), e.getMessage)
+  }
+
   test("PQ index-pair coherence: desync detected at row AND cell grain, reconcile heals") {
     import org.apache.spark.sql.functions.col
     val all = emb
