@@ -258,8 +258,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
           if (new graft.stages.MergeTable(dir.toString, Seq.empty)
               .pendingDeleteVectors.isDefined)
             throw new IllegalStateException(
-              s"$catalogName.$ident has pending merge-on-read deletes — run " +
-                s"reconcileDeletes before dropping column $name")
+              s"cannot drop column $name: $catalogName.$ident has pending " +
+                "merge-on-read deletes whose predicates bind columns by name " +
+                "— run reconcileDeletes first")
           schema = StructType(schema.fields.filterNot(_.name == name))
         case other => throw new UnsupportedOperationException(
           s"unsupported table change: $other")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -261,24 +261,24 @@ object Similarity {
     * top-`degree` by cosine per node, plus the id-chain edge so the graph
     * is connected), then each query greedily BEAM-SEARCHES it starting
     * from its OWN IVF cell's centroid node — `rounds` rounds of: expand
-    * the frontier through the edge table, union the current beam, keep
+    * the frontier through its neighbour lists, union the current beam, keep
     * the top `beam` by cosine. (A fixed global entry node was the r13
     * formulation; it measured 0.58 recall because distant queries spent
     * their round budget traversing the id-chain — entering at the
     * query's own cell is the NSW entry heuristic and restores the recall
     * the candidate generator supports.)
     *
-    * Scale shape: the index is the edge table — n·(degree+1) rows
-    * resident, the HNSW memory contract; build is a cell EQUI-join
+    * Scale shape: the index is the adjacency — n·(degree+1) neighbour
+    * ids resident, the HNSW memory contract; build is a cell EQUI-join
     * (never global n²) + one per-src window over cell-bounded
     * candidates, and the cell count GROWS WITH THE CORPUS as ⌈√n⌉
     * (default, overridable via `centroids`), so expected per-cell
     * population is √n and the build join is Σ|cell|² ≈ n^1.5 total —
     * at a fixed cell count it would be n²/cells, a scale-killer.
-    * Serving is R bounded rounds, each ONE node-keyed join of the
-    * (queries×beam)-row frontier against the edge table + a per-query
-    * top-beam window — no corpus scan per query at all, the property that
-    * separates graph ANN from every quantization rung. Deterministic:
+    * Serving is at most R rounds of the walk kernel, each one job that
+    * scores only the (queries×beam)-bounded candidates — no query ever
+    * scores the corpus, the property that separates graph ANN from every
+    * quantization rung. Deterministic:
     * first-⌈√n⌉-ids quantizer, cosine ties to the smaller id, per-query
     * cell entry; the oracle unrolls the identical rounds. Output carries
     * brute-truth flags (the [[matryoshkaTopK]] convention) so recall is
@@ -287,104 +287,71 @@ object Similarity {
   def beamSearchTopK(spark: SparkSession, emb: DataFrame, numQueries: Int,
                      k: Int, degree: Int = 4, beam: Int = 4, rounds: Int = 4,
                      centroids: Int = 0): DataFrame = {
-    val (base, edges) = cellKnnGraph(emb, degree, centroids)
-    beamSearchTopKOnGraph(spark, emb, base, edges, numQueries, k, beam, rounds)
+    val (base, adj) = cellKnnGraph(emb, degree, centroids)
+    beamSearchTopKOnGraph(spark, emb, base, adj, numQueries, k, beam, rounds)
   }
 
-  /** [[beamSearchTopK]] over a PREBUILT `(base, edges)` graph (the
+  /** [[beamSearchTopK]] over a PREBUILT `(base, adj)` graph (the
     * [[cellKnnGraph]] outputs) — callers that already hold the index
     * walk it without rebuilding the n^1.5 build join.
     */
   def beamSearchTopKOnGraph(spark: SparkSession, emb: DataFrame,
-                            base: DataFrame, edges: DataFrame,
+                            base: DataFrame, adj: DataFrame,
                             numQueries: Int, k: Int,
-                            beam: Int, rounds: Int): DataFrame = {
-    val queries = base.filter(col("vec_id") < numQueries)
+                            beam: Int, rounds: Int): DataFrame =
+    beamTopKWithTruth(exactGraphWalk(base, adj, numQueries, beam, rounds),
+      emb, numQueries, k)
+
+  /** The exact-scored walk over a [[cellKnnGraph]] graph. NSW entry
+    * heuristic: each query starts at its own cell's centroid node (cell
+    * ids ARE node ids — the quantizer is the first ⌈√n⌉ vectors), not at
+    * one global fixed node. */
+  private def exactGraphWalk(base: DataFrame, adj: DataFrame, numQueries: Int,
+                             beam: Int, rounds: Int): DataFrame =
+    cellEntryWalk(walkSide(nodeSideOf(base), adj), graphQueries(base, numQueries),
+      beam, rounds)
+
+  /** (node, n_emb, n_norm) of cell-assigned or node-table rows. */
+  private def nodeSideOf(base: DataFrame): DataFrame =
+    base.select(col("vec_id").as("node"), col("embedding").as("n_emb"),
+      col("norm").as("n_norm"))
+
+  /** The query rows of a [[cellKnnGraph]] graph: (query_id, q_emb,
+    * q_norm, cell). */
+  private def graphQueries(base: DataFrame, numQueries: Int): DataFrame =
+    base.filter(col("vec_id") < numQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("norm").as("q_norm"), col("cell"))
-    val nodeSide = base.select(col("vec_id").as("node"),
-      col("embedding").as("n_emb"), col("norm").as("n_norm"))
-    // NSW entry heuristic: each query starts at its own cell's centroid
-    // node (cell ids ARE node ids — the quantizer is the first ⌈√n⌉
-    // vectors), not at one global fixed node; the bounded query side
-    // broadcasts so the corpus node side streams (the beamRounds posture)
-    val entry0 = broadcast(queries).join(nodeSide, col("node") === col("cell"))
-      .withColumn("cosine",
-        expr(dotExpr("n_emb", "q_emb")) / (col("n_norm") * col("q_norm")))
-      .select(col("query_id"), col("node"), col("cosine"))
-    val beamDf = beamRounds(queries, entry0, edges, nodeSide, beam, rounds)
-    beamTopKWithTruth(beamDf, emb, numQueries, k)
-  }
 
   /** Multi-arm beam sweep over ONE prebuilt graph — the walk-parameter
     * sweeps ([[beamWidthReport]], [[recallReport]]) price every
-    * (scoring family, beam width) arm in the SAME bounded rounds: the
-    * frontier is keyed by (method, query_id), each round is still ONE
-    * node-keyed join of the all-arms frontier against the edge table +
-    * one window, and per-arm widths apply as a `brank <= beam` filter.
-    * Walking arms jointly instead of sequentially divides the
-    * fixed-cost round count by the arm count (the r14 card paid
-    * 3 builds × 6 rounds; this pays 1 build × 6 rounds for 6 arms) —
+    * (scoring family, beam width) arm in the SAME walk: keys are
+    * (arm, query), each round is still one scoring job for all arms, and
+    * each arm keeps its own beam width. Walking arms jointly instead of
+    * sequentially divides the fixed-cost round count by the arm count —
     * and at scale a sweep that re-walks the graph per parameter is a
     * repeated-lineage bug, not a tuning card. Family 'x' arms score on
-    * exact vectors; family 'q' arms score on the PQ `recon` side and
-    * get the exact final-beam rerank (the DiskANN serving path). Output
+    * exact vectors; family 'q' arms score on the PQ `recon` side and get
+    * the exact final-beam rerank (the DiskANN serving path). Output
     * (method, query_id, rank, neighbor_id, cosine), checkpointed —
     * per-arm filters are row-bounded reads, not replays.
     */
-  def beamSweepOnGraph(spark: SparkSession, base: DataFrame, edges: DataFrame,
+  def beamSweepOnGraph(spark: SparkSession, base: DataFrame, adj: DataFrame,
                        recon: DataFrame, arms: Seq[(String, String, Int)],
                        numQueries: Int, k: Int, rounds: Int): DataFrame = {
-    import spark.implicits._
     require(arms.nonEmpty && arms.forall(a => a._2 == "x" || a._2 == "q"),
       s"arm families must be x (exact) or q (pq-recon), got $arms")
-    val armDf = arms.toDF("method", "fam", "beam")
-    val nodeSide = base.select(col("vec_id").as("node"),
-      col("embedding").as("n_emb"), col("norm").as("n_norm"))
-    val queriesLite = base.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("norm").as("q_norm"), col("cell"))
-    // one scoring side per family, unioned under a fam key: the round
-    // join resolves each arm's scorer by (node, fam) equi-keys
-    val scoreSide = {
-      val x = nodeSide.withColumn("fam", lit("x"))
-      if (arms.exists(_._2 == "q")) x.unionByName(recon.withColumn("fam", lit("q")))
-      else x
-    }
-    val queries = queriesLite.crossJoin(broadcast(armDf))
-    val entry0 = broadcast(queries)
-      .join(scoreSide.withColumnRenamed("fam", "sfam"),
-        col("node") === col("cell") && col("fam") === col("sfam"))
-      .withColumn("cosine",
-        expr(dotExpr("n_emb", "q_emb")) / (col("n_norm") * col("q_norm")))
-      .select(col("method"), col("fam"), col("beam"), col("query_id"),
-        col("node"), col("cosine"))
-    var beamDf = entry0.localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      // frontier-side broadcasts, the beamRounds posture: the all-arms
-      // frontier is ≤ Σ|arm beams|·|queries| rows; edges/scoreSide are
-      // corpus-sized and must stream map-only
-      val expanded = broadcast(beamDf
-        .select(col("method"), col("fam"), col("beam"), col("query_id"), col("node")))
-        .join(edges, col("node") === col("src"))
-        .select(col("method"), col("fam"), col("beam"), col("query_id"),
-          col("dst").as("node"))
-        .unionByName(beamDf.select(col("method"), col("fam"), col("beam"),
-          col("query_id"), col("node")))
-        .distinct()
-      val wB = Window.partitionBy(col("method"), col("query_id"))
-        .orderBy(col("cosine").desc, col("node"))
-      beamDf = broadcast(expanded)
-        .join(scoreSide, Seq("node", "fam"))
-        .join(broadcast(queriesLite.drop("cell")), Seq("query_id"))
-        .withColumn("cosine",
-          expr(dotExpr("n_emb", "q_emb")) / (col("n_norm") * col("q_norm")))
-        .withColumn("brank", row_number().over(wB))
-        .filter(col("brank") <= col("beam"))
-        .select(col("method"), col("fam"), col("beam"), col("query_id"),
-          col("node"), col("cosine"))
-        .localCheckpoint(true)
-    }
+    val nodeSide = nodeSideOf(base)
+    val queriesLite = graphQueries(base, numQueries)
+    val fams = arms.map(_._2).distinct
+    val sides = fams.map(f => walkSide(if (f == "x") nodeSide else recon, adj))
+    val qs = collectQueries(queriesLite)
+    val out = walk(sides.toIndexedSeq, qs.map(_._2),
+      arms.map { case (_, f, b) => WalkArm(fams.indexOf(f), b, 1) }.toIndexedSeq,
+      q => Seq(qs(q)._3), rounds, None)
+    val beamDf = hitFrame(spark, Seq("method", "fam"),
+      for (((a, q), hits) <- out.toSeq; h <- hits)
+        yield Row(arms(a)._1, arms(a)._2, qs(q)._1, h.node, h.cosine))
     val wK = Window.partitionBy(col("method"), col("query_id"))
       .orderBy(col("cosine").desc, col("node"))
     val exact = beamDf.filter(col("fam") === "x" && col("node") =!= col("query_id"))
@@ -410,17 +377,18 @@ object Similarity {
   }
 
   /** The ⌈√n⌉-cell kNN graph build shared by [[beamSearchTopK]] and
-    * [[graphPqTopK]]: returns (cell-assigned corpus, edge table). Graph
+    * [[graphPqTopK]]: returns (cell-assigned corpus, adjacency rows). Graph
     * candidates come from the IVF cell assignment, not LSH sign buckets —
     * the measured recall ladder (sim_recall_report) shows cells carry
     * locality where sign buckets don't (ivf_nprobe1 0.98 vs lsh_single
     * 0.00), and a kNN graph is only as good as its candidate generator.
-    * Edges = per-src within-cell top-`degree` by cosine, plus the
-    * id-chain edge for connectivity; both outputs eagerly checkpointed
-    * (every consumer references them repeatedly across rounds).
+    * The adjacency rows (src, dsts) are [[cellAdjacency]]'s per-src
+    * within-cell top-`degree` by cosine plus the id-chain neighbour for
+    * connectivity; both outputs eagerly checkpointed (a sweep builds one
+    * score side per family from the same adjacency).
     */
-  private def cellKnnGraph(emb: DataFrame, degree: Int,
-                           centroids: Int): (DataFrame, DataFrame) = {
+  private[graft] def cellKnnGraph(emb: DataFrame, degree: Int,
+                                  centroids: Int): (DataFrame, DataFrame) = {
     val base0 = withNorm(emb).localCheckpoint(true)
     // ⌈√n⌉ cells by default: per-cell candidate joins stay √n-bounded at
     // any corpus size (see scaladoc); explicit `centroids` is a test knob
@@ -436,21 +404,9 @@ object Similarity {
         rowNormCol = Some("norm"), storedNorm = true)
       .select(col("vec_id"), col("embedding"), col("norm"), col("c_id").as("cell"))
       .localCheckpoint(true)
-    val cand = base.select(col("vec_id").as("src"), col("embedding").as("s_emb"),
-        col("norm").as("s_norm"), col("cell"))
-      .join(base.select(col("vec_id").as("dst"), col("embedding").as("d_emb"),
-        col("norm").as("d_norm"), col("cell")), Seq("cell"))
-      .filter(col("src") =!= col("dst"))
-      .withColumn("ecos",
-        expr(dotExpr("s_emb", "d_emb")) / (col("s_norm") * col("d_norm")))
-    val wG = Window.partitionBy(col("src")).orderBy(col("ecos").desc, col("dst"))
-    val cellEdges = cand.withColumn("grank", row_number().over(wG))
-      .filter(col("grank") <= degree).select(col("src"), col("dst"))
-    val ids = base.select(col("vec_id"))
-    val chain = ids.select(col("vec_id").as("src"), (col("vec_id") + 1).as("dst"))
-      .join(ids.withColumnRenamed("vec_id", "dst"), Seq("dst"), "left_semi")
-    val edges = cellEdges.unionByName(chain).distinct().localCheckpoint(true)
-    (base, edges)
+    val adj = cellAdjacency(base, degree).unionByName(chainRows(base))
+      .localCheckpoint(true)
+    (base, adj)
   }
 
   /** DiskANN-shaped composition (Subramanya et al. 2019, NeurIPS —
@@ -469,47 +425,46 @@ object Similarity {
                   k: Int, degree: Int = 6, beam: Int = 8, rounds: Int = 6,
                   m: Int = 8, ksub: Int = 16, dim: Int = 64,
                   centroids: Int = 0): DataFrame = {
-    val (base, edges) = cellKnnGraph(emb, degree, centroids)
-    graphPqTopKOnGraph(spark, emb, base, edges,
+    val (base, adj) = cellKnnGraph(emb, degree, centroids)
+    graphPqTopKOnGraph(spark, emb, base, adj,
       pqReconSide(emb, m, ksub, dim), numQueries, k, beam, rounds)
   }
 
   /** The PQ-reconstruction scoring side (node, n_emb, n_norm) — what
-    * stays memory-resident in the DiskANN composition. Checkpointed:
-    * every beam round references it. */
+    * stays memory-resident in the DiskANN composition. */
   def pqReconSide(emb: DataFrame, m: Int = 8, ksub: Int = 16,
                   dim: Int = 64): DataFrame =
     withPq(emb, m, ksub, dim)
       .withColumn("recon_norm", expr(s"sqrt(${dotExpr("pq_recon", "pq_recon")})"))
       .select(col("vec_id").as("node"), col("pq_recon").as("n_emb"),
         col("recon_norm").as("n_norm"))
-      .localCheckpoint(true)
 
   /** [[graphPqTopK]] over a PREBUILT graph and recon side — the
     * [[beamSearchTopKOnGraph]] convention applied to the PQ-scored
     * walk. */
   def graphPqTopKOnGraph(spark: SparkSession, emb: DataFrame,
-                         base: DataFrame, edges: DataFrame, recon: DataFrame,
+                         base: DataFrame, adj: DataFrame, recon: DataFrame,
                          numQueries: Int, k: Int,
                          beam: Int, rounds: Int): DataFrame = {
-    val queries = base.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("norm").as("q_norm"), col("cell"))
-    val entry0 = broadcast(queries).join(recon, col("node") === col("cell"))
-      .withColumn("cosine",
-        expr(dotExpr("n_emb", "q_emb")) / (col("n_norm") * col("q_norm")))
-      .select(col("query_id"), col("node"), col("cosine"))
-    val beamDf = beamRounds(queries, entry0, edges, recon, beam, rounds)
-    // exact rerank of the FINAL beam only — ≤beam full-vector reads/query;
-    // the bounded beam broadcasts, the full-vector side streams
-    val nodeSide = base.select(col("vec_id").as("node"),
-      col("embedding").as("n_emb"), col("norm").as("n_norm"))
+    val queries = graphQueries(base, numQueries)
+    exactRerankWithTruth(cellEntryWalk(walkSide(recon, adj), queries, beam, rounds),
+      base, queries, numQueries, k)
+  }
+
+  /** The DiskANN finish of a PQ-scored walk: exact rerank of the FINAL
+    * beam only — ≤beam full-vector reads per query, read from `vectors`
+    * (vec_id, embedding, norm) — with brute-truth flags over the same
+    * vectors. The bounded beam broadcasts, the full-vector side streams.
+    */
+  private def exactRerankWithTruth(beamDf: DataFrame, vectors: DataFrame,
+                                   queries: DataFrame, numQueries: Int,
+                                   k: Int): DataFrame = {
     val wK = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("node"))
     val reranked = broadcast(beamDf
         .select(col("query_id"), col("node"), col("cosine").as("cosine_pq"))
         .filter(col("node") =!= col("query_id")))
-      .join(nodeSide, Seq("node"))
+      .join(nodeSideOf(vectors), Seq("node"))
       .join(broadcast(queries), Seq("query_id"))
       .withColumn("cosine",
         expr(dotExpr("n_emb", "q_emb")) / (col("n_norm") * col("q_norm")))
@@ -517,7 +472,8 @@ object Similarity {
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank").cast("int").as("rank"),
         col("node").as("neighbor_id"), col("cosine_pq"), col("cosine"))
-    val truth = bruteForceTopK(emb, numQueries, k)
+    val truth = bruteForceTopK(vectors.select(col("vec_id"), col("embedding")),
+        numQueries, k)
       .select(col("query_id"), col("neighbor_id"), lit(1).as("_hit"))
     reranked
       .join(truth, Seq("query_id", "neighbor_id"), "left")
@@ -525,65 +481,176 @@ object Similarity {
       .drop("_hit")
   }
 
-  /** The greedy beam loop shared by [[beamSearchTopK]],
-    * [[graphIndexSearch]] and [[graphPqTopK]]: `rounds` rounds of —
-    * expand the frontier one hop through the edge table, union the
-    * current beam, re-score, keep the top `beam` per query. Each round is
-    * ONE node-keyed join of the (queries×beam)-row frontier against the
-    * edge table; lineage cut per round so plan depth stays O(1) in
-    * rounds. `queries` must carry (query_id, q_emb, q_norm); `entry0` is
-    * the scored initial beam (query_id, node, cosine); `scoreSide`
-    * carries (node, n_emb, n_norm) — full vectors, or reconstructions
-    * for asymmetric-distance scoring.
-    *
-    * Join posture (r17, guide §2.4/§3.1): the frontier is bounded by
-    * construction (≤ |queries|·beam rows; expanded ≤ ·(degree+2)), while
-    * `edges` and `scoreSide` are corpus-sized — so the FRONTIER side
-    * carries the broadcast hint in both per-round joins and the big
-    * sides stream map-only. Checkpointed-RDD leaves have no size stats
-    * (defaultSizeInBytes), so without the hint every round planned a
-    * sort-merge join that exchanged AND sorted the whole edge table and
-    * the whole score side — n-scaling shuffle bytes per round for a
-    * frontier-sized output. The score side is exactly the piece DiskANN
-    * keeps node-resident; it must never be broadcast OR shuffled by the
-    * walk, only streamed.
-    */
-  private def beamRounds(queries: DataFrame, entry0: DataFrame,
-                         edges: DataFrame, scoreSide: DataFrame,
-                         beam: Int, rounds: Int): DataFrame = {
-    // Checkpoints stay EAGER on purpose (r17 measured): each round
-    // references the previous beam TWICE (frontier expansion + union),
-    // so a lazy checkpoint lets the two branches race to materialize the
-    // same unpersisted RDD and the recompute compounds across rounds
-    // (BenchProbe: taskTime 17 s -> 38 s on the recall ladder when these
-    // were made lazy). One driver job per round is the cheaper side.
-    var beamDf = entry0.localCheckpoint(true)
-    for (r <- 1 to rounds) {
-      val expanded = broadcast(beamDf.select(col("query_id"), col("node")))
-        .join(edges, col("node") === col("src"))
-        .select(col("query_id"), col("dst").as("node"))
-        .unionByName(beamDf.select(col("query_id"), col("node")))
-        .distinct()
-      val wB = Window.partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("node"))
-      val next = broadcast(expanded)
-        .join(scoreSide, Seq("node"))
-        .join(broadcast(queries), Seq("query_id"))
-        .withColumn("cosine",
-          expr(dotExpr("n_emb", "q_emb")) / (col("n_norm") * col("q_norm")))
-        .withColumn("brank", row_number().over(wB))
-        .filter(col("brank") <= beam)
-        .select(col("query_id"), col("node"), col("cosine"))
-      // dev plan evidence: checkpoints hide the per-round join shape from
-      // the final query's explain, so GRAFT_DUMP_ROUND_PLAN=1 prints round
-      // 1's formatted plan (never set by Bench/Verify — zero cost there)
-      if (r == 1 && sys.env.contains("GRAFT_DUMP_ROUND_PLAN"))
-        println("===== beamRounds round-1 plan =====\n" +
-          next.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-      beamDf = next.localCheckpoint(true)
+  // ---------------------------------------------------------------------
+  // The walk kernel — every graph walk (plain, PQ-scored, multi-arm
+  // sweep, filtered) runs through `walk`.
+  //
+  // Contract: a walk key is (arm, query). Round 0 scores each key's entry
+  // candidates and keeps the top `entries` as the first frontier; each of
+  // `rounds` rounds then expands the frontier one hop (frontier ∪ its
+  // neighbours), scores the expanded set and keeps the top `beam` by
+  // (cosine desc, node asc). A filtered walk also keeps every scored node
+  // whose label matches in a pool, and expands the pool's top `beam` as a
+  // second frontier from round 2 on. That is the definition the DuckDB
+  // mirrors unroll (`beamGraphSql`, `filteredArmCtes`).
+  //
+  // Each round is ONE Spark job: the checkpointed score side
+  // (node, n_emb, n_norm, nbrs[, n_label]) is filtered to the round's
+  // candidate nodes, every candidate is scored with the walk's one cosine
+  // expression against the collected query literal, and (node, nbrs,
+  // [label], cosines) come back to the driver, which ranks with
+  // `walkOrder` — Spark's own double and null ordering, so each cut
+  // equals `row_number() OVER (ORDER BY cosine DESC, node)`. The driver
+  // holds only the frontiers (and a filtered walk's pool), at most
+  // |keys|·beam·(degree+2) candidate rows per round; the corpus-sized
+  // side streams map-only and is never collected.
+  //
+  // Per-key stop: a round is a deterministic function of the frontier
+  // and pool before it, so a key whose frontier and pool did not change
+  // has reached its fixed point — it is frozen and no longer scored. The
+  // loop ends when every key is frozen or after `rounds` rounds.
+  // ---------------------------------------------------------------------
+
+  /** One collected walk query: its double-widened vector and its norm. */
+  private[ops] final case class WalkQuery(q: Seq[Double], qn: Double)
+
+  /** One walked arm: the score side it reads, its frontier width, and
+    * how many of its scored entry candidates open the walk. */
+  private final case class WalkArm(side: Int, beam: Int, entries: Int)
+
+  /** A node scored for one key; `cosine` is null where Spark's is. */
+  private final case class Hit(node: Long, cosine: java.lang.Double,
+                               nbrs: Array[Long], matched: Boolean)
+
+  /** `ORDER BY cosine DESC, node` as Spark sorts it: SQL double
+    * comparison (NaN above every number, -0.0 equal to 0.0), a null
+    * cosine last, ties to the smaller node. */
+  private[graft] val walkOrder: Ordering[(java.lang.Double, Long)] =
+    new Ordering[(java.lang.Double, Long)] {
+      def compare(a: (java.lang.Double, Long), b: (java.lang.Double, Long)): Int = {
+        val c =
+          if (a._1 == null) { if (b._1 == null) 0 else 1 }
+          else if (b._1 == null) -1
+          else org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+            .compareDoubles(b._1, a._1)
+        if (c != 0) c else java.lang.Long.compare(a._2, b._2)
+      }
     }
-    beamDf
+
+  private val hitOrder: Ordering[Hit] = walkOrder.on(h => (h.cosine, h.node))
+
+  /** The walk (see the kernel contract above). `entries(query)` are a
+    * query's entry candidates; `label` makes it a filtered walk. Returns
+    * each key's final frontier, or its pool when filtered. */
+  private def walk(sides: IndexedSeq[DataFrame], queries: IndexedSeq[WalkQuery],
+                   arms: IndexedSeq[WalkArm], entries: Int => Seq[Long],
+                   rounds: Int, label: Option[Int]): Map[(Int, Int), Seq[Hit]] = {
+    graft.functions.GraftFunctions.register(sides.head.sparkSession)
+    val qLit = typedLit(queries)
+    // one job: score each key's candidate nodes on its arm's side
+    def score(want: Seq[((Int, Int), Seq[Long])]): Map[(Int, Int), Seq[Hit]] = {
+      val scans = want.groupBy { case ((a, _), _) => arms(a).side }.toSeq.map {
+        case (s, ws) =>
+          val queriesOf = ws.flatMap { case ((_, q), nodes) => nodes.map(_ -> q) }
+            .groupBy(_._1).map { case (n, nq) => n -> nq.map(_._2).distinct.toArray }
+          val wanted = udf((n: Long) => queriesOf.getOrElse(n, null))
+          sides(s).withColumn("_qi", wanted(col("node")))
+            .filter(col("_qi").isNotNull)
+            .withColumn("_q", qLit)
+            .select(lit(s).as("side"), col("node"), col("nbrs"),
+              label.fold(lit(false))(l => coalesce(col("n_label") === l, lit(false)))
+                .as("matched"),
+              col("_qi"),
+              expr("transform(_qi, i -> graft_dot(CAST(n_emb AS ARRAY<DOUBLE>), " +
+                "_q[i].q) / (n_norm * _q[i].qn))").as("cos"))
+      }
+      val rows = scans.reduceOption(_ unionByName _).fold(Array.empty[Row])(_.collect())
+      val hits = rows.iterator.flatMap { r =>
+        val (node, nbrs) = (r.getLong(1), r.getSeq[Long](2).toArray)
+        r.getSeq[Int](4).zip(r.getSeq[java.lang.Double](5)).map { case (q, c) =>
+          (r.getInt(0), q, node) -> Hit(node, c, nbrs, r.getBoolean(3))
+        }
+      }.toMap
+      want.map { case (k @ (a, q), nodes) =>
+        k -> nodes.flatMap(n => hits.get((arms(a).side, q, n)))
+      }.toMap
+    }
+    def top(hits: Iterable[Hit], n: Int): Seq[Hit] = hits.toSeq.sorted(hitOrder).take(n)
+    val keys = for (a <- arms.indices; q <- queries.indices) yield (a, q)
+    val opened = score(keys.map(k => k -> entries(k._2)))
+    var front = keys.map(k => k -> top(opened(k), arms(k._1).entries)).toMap
+    var pool = keys.map(k => k -> Map.empty[Long, Hit]).toMap
+    var live = keys
+    var round = 0
+    while (round < rounds && live.nonEmpty) {
+      round += 1
+      val scored = score(live.map { k =>
+        val from = front(k) ++ top(pool(k).values, arms(k._1).beam)
+        k -> (from.map(_.node) ++ from.flatMap(_.nbrs)).distinct
+      })
+      live = live.filter { k =>
+        val next = top(scored(k), arms(k._1).beam)
+        val grown = pool(k) ++ scored(k).filter(_.matched).map(h => h.node -> h)
+        val moved = next.map(_.node).toSet != front(k).map(_.node).toSet ||
+          grown.size != pool(k).size
+        front += k -> next
+        pool += k -> grown
+        moved
+      }
+    }
+    if (label.isEmpty) front else pool.map { case (k, p) => k -> p.values.toSeq }
+  }
+
+  /** The walk's query rows (query_id, q_emb, q_norm, cell), collected
+    * once as (query_id, literal vector, cell). */
+  private def collectQueries(queries: DataFrame): IndexedSeq[(Long, WalkQuery, Long)] =
+    queries.select(col("query_id"), expr("CAST(q_emb AS ARRAY<DOUBLE>)"),
+        col("q_norm"), col("cell"))
+      .collect().toIndexedSeq
+      .map(r => (r.getLong(0), WalkQuery(r.getSeq[Double](1), r.getDouble(2)), r.getLong(3)))
+      .sortBy(_._1)
+
+  /** Walk rows as a local DataFrame: the string `keyCols`, then
+    * (query_id, node, cosine). */
+  private def hitFrame(spark: SparkSession, keyCols: Seq[String],
+                       rows: Seq[Row]): DataFrame = {
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, StructType(
+      keyCols.map(StructField(_, StringType)) ++ Seq(
+        StructField("query_id", LongType), StructField("node", LongType),
+        StructField("cosine", DoubleType))))
+  }
+
+  /** The chain neighbour of every indexed id as adjacency rows
+    * (id - 1 → [id]). A src that is not itself indexed finds no score
+    * row and drops out, so each node gains vec_id + 1 exactly when that
+    * id is indexed — the connectivity fallback, derived at serve time and
+    * never persisted (a later id + 1 insert would invalidate it). */
+  private def chainRows(ids: DataFrame): DataFrame =
+    ids.select((col("vec_id") - 1).as("src"), array(col("vec_id")).as("dsts"))
+
+  /** A walk's score side: `score` (node, n_emb, n_norm[, n_label]) with
+    * each node's neighbour list gathered from adjacency rows
+    * (src, dsts). Checkpointed: every round scans it. */
+  private def walkSide(score: DataFrame, adj: DataFrame): DataFrame = {
+    val nbrs = adj.groupBy(col("src"))
+      .agg(array_distinct(flatten(collect_list(col("dsts")))).as("nbrs"))
+    score.join(nbrs, col("node") === col("src"), "left")
+      .withColumn("nbrs", coalesce(col("nbrs"), typedLit(Seq.empty[Long])))
+      .drop("src")
+      .localCheckpoint(true)
+  }
+
+  /** The plain walk of every query from its own cell's node, on one
+    * score side: the final frontier as (query_id, node, cosine) rows. */
+  private def cellEntryWalk(side: DataFrame, queries: DataFrame,
+                            beam: Int, rounds: Int): DataFrame = {
+    val qs = collectQueries(queries)
+    val out = walk(IndexedSeq(side), qs.map(_._2), IndexedSeq(WalkArm(0, beam, 1)),
+      q => Seq(qs(q)._3), rounds, None)
+    hitFrame(side.sparkSession, Nil, for (((_, q), hits) <- out.toSeq; h <- hits)
+      yield Row(qs(q)._1, h.node, h.cosine))
   }
 
   /** Final-beam top-k WITHOUT flags — the sweep-side finisher (the
@@ -1577,28 +1644,8 @@ object Similarity {
                         labelValue: Int, numQueries: Int, k: Int,
                         degree: Int = 6, beam: Int = 8, rounds: Int = 6,
                         entries: Int = 8, centroids: Int = 0): DataFrame = {
-    val (base, edges0) = cellKnnGraph(emb, degree, centroids)
-    val edges = edges0.unionByName(labelStitchedEdges(base, emb, degree))
-      .distinct().localCheckpoint(true)
-    val nodeSide = labeledNodeSide(base, emb)
-    val queries = base.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("norm").as("q_norm"))
-    // MULTI-ENTRY (the walk-side analogue of filtered IVF's widened
-    // nprobe, and Filtered-DiskANN's filter-aware start points): a
-    // single own-cell entry finds the query's top UNFILTERED
-    // neighborhood, but the k-th best MATCH sits at global rank
-    // ~k/selectivity — spread across the query's top few cells, beyond
-    // one cell's greedy basin (measured: beam widening alone saturates
-    // ~0.83). Entering at the query's `entries` nearest centroid nodes
-    // walks each of those cells; entries is the measured knob
-    // ([[graphFilteredBeamReport]]), exactly as nprobe is for the IVF
-    // filtered family.
-    val entry0 = entryRanking(queries, nodeSide, base)
-      .filter(col("er") <= entries)
-      .select(col("query_id"), col("node"), col("cosine"))
-    val pool = filteredBeamRounds(queries, entry0, edges,
-      nodeSide, labelValue, beam, rounds)
+    val pool = filteredPools(emb, labelValue, numQueries, degree, centroids,
+      Seq(("", entries, beam)), rounds)
     val wK = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("node"))
     val res = pool.filter(col("node") =!= col("query_id"))
@@ -1612,147 +1659,89 @@ object Similarity {
       .drop("_hit")
   }
 
-  /** The walk's score side with the predicate column riding along —
-    * (node, n_emb, n_norm, n_label). Checkpointed: every round
-    * references it. */
-  private def labeledNodeSide(base: DataFrame, emb: DataFrame): DataFrame =
-    base.join(emb.select(col("vec_id"), col("label")), Seq("vec_id"))
-      .select(col("vec_id").as("node"), col("embedding").as("n_emb"),
-        col("norm").as("n_norm"), col("label").as("n_label"))
-      .localCheckpoint(true)
-
-  /** Label-stitched edge augmentation (Filtered-DiskANN's
-    * StitchedVamana, Gollapudi et al. WWW '23 — per-filter subgraph
-    * edges unioned into one index): on top of the UNFILTERED routing
-    * edges, each node gets (a) its top-`degree` same-label neighbors
-    * within its cell — so one found match leads directly to the nearby
-    * matches, which is where the remaining truths are — and (b) a
-    * per-label id-chain edge, keeping every label class globally
-    * connected the way the plain chain keeps the whole graph connected.
-    * Without these, a selective predicate's walk has to reach each match
-    * through unfiltered territory and recall plateaus (~0.83 measured at
-    * 10% selectivity, any beam); with them the matched-pool frontier
-    * CRAWLS the label subgraph. Build cost is per-(cell, label)
-    * candidates — Σ|cell ∩ label|² ≈ n^1.5/|labels| — cheaper than the
-    * unfiltered build; memory is +degree edges per node, the same
-    * contract. One stitched graph serves every label.
+  /** The filtered walk — the Filtered-DiskANN search shape — of every
+    * query, one walk arm per (method, entries, beam), over the
+    * label-stitched graph: each arm's pool as (method, query_id, node,
+    * cosine) rows.
+    *
+    * Each round expands TWO frontiers: the unfiltered routing beam
+    * (exactly the plain walk's, so navigation toward the query never
+    * degrades), and the top-`beam` MATCHED nodes collected so far, whose
+    * neighbourhoods are where further matches cluster. A routing-only
+    * walk converges to the query's top unfiltered neighbours and stalls
+    * near recall ~0.8 on a 10%-selective predicate (measured): the k-th
+    * best MATCH sits at global rank ~k/selectivity, outside the greedy
+    * basin. The pool is bounded by rounds · |queries| · 2·beam·(degree+2)
+    * rows before label thinning — frontier-sized, never corpus-sized.
+    *
+    * MULTI-ENTRY (the walk-side analogue of filtered IVF's widened
+    * nprobe, and Filtered-DiskANN's filter-aware start points): a single
+    * own-cell entry finds the query's top UNFILTERED neighbourhood, but
+    * the k-th best match is spread across the query's top few cells,
+    * beyond one cell's greedy basin (beam widening alone saturates
+    * ~0.83). Round 0 scores every centroid node (the first ⌈√n⌉ ids, by
+    * [[cellKnnGraph]]'s quantizer) and each arm opens at its `entries`
+    * best; entries is the measured knob ([[graphFilteredBeamReport]]),
+    * exactly as nprobe is for the IVF filtered family.
     */
-  private def labelStitchedEdges(base: DataFrame, emb: DataFrame,
-                                 degree: Int): DataFrame = {
+  private def filteredPools(emb: DataFrame, labelValue: Int, numQueries: Int,
+                            degree: Int, centroids: Int,
+                            arms: Seq[(String, Int, Int)],
+                            rounds: Int): DataFrame = {
+    val (base, adj) = cellKnnGraph(emb, degree, centroids)
     val baseL = base.join(emb.select(col("vec_id"), col("label")), Seq("vec_id"))
-    val candL = baseL.select(col("vec_id").as("src"), col("embedding").as("s_emb"),
-        col("norm").as("s_norm"), col("cell"), col("label"))
-      .join(baseL.select(col("vec_id").as("dst"), col("embedding").as("d_emb"),
-        col("norm").as("d_norm"), col("cell"), col("label")),
-        Seq("cell", "label"))
-      .filter(col("src") =!= col("dst"))
-      .withColumn("ecos",
-        expr(dotExpr("s_emb", "d_emb")) / (col("s_norm") * col("d_norm")))
-    val wG = Window.partitionBy(col("src")).orderBy(col("ecos").desc, col("dst"))
-    val labelCellEdges = candL.withColumn("grank", row_number().over(wG))
-      .filter(col("grank") <= degree).select(col("src"), col("dst"))
+    val side = walkSide(
+      baseL.select(col("vec_id").as("node"), col("embedding").as("n_emb"),
+        col("norm").as("n_norm"), col("label").as("n_label")),
+      adj.unionByName(labelStitchedAdjacency(baseL, degree)))
+    val qs = collectQueries(graphQueries(base, numQueries))
+    val nCents = math.ceil(math.sqrt(base.count().toDouble)).toLong
+    val out = walk(IndexedSeq(side), qs.map(_._2),
+      arms.map { case (_, e, b) => WalkArm(0, b, e) }.toIndexedSeq,
+      _ => 0L until nCents, rounds, Some(labelValue))
+    hitFrame(emb.sparkSession, Seq("method"),
+      for (((a, q), hits) <- out.toSeq; h <- hits)
+        yield Row(arms(a)._1, qs(q)._1, h.node, h.cosine))
+  }
+
+  /** Label-stitched adjacency (Filtered-DiskANN's StitchedVamana,
+    * Gollapudi et al. WWW '23 — per-filter subgraph edges unioned into
+    * one index): on top of the UNFILTERED routing edges, each node of
+    * `baseL` (cell-assigned rows with their label) gets (a) its
+    * top-`degree` same-label neighbours within its cell — so one found
+    * match leads directly to the nearby matches, which is where the
+    * remaining truths are — and (b) a per-label id-chain edge, keeping
+    * every label class globally connected the way the plain chain keeps
+    * the whole graph connected. Without these, a selective predicate's
+    * walk has to reach each match through unfiltered territory and
+    * recall plateaus (~0.83 measured at 10% selectivity, any beam); with
+    * them the matched-pool frontier CRAWLS the label subgraph. Build cost
+    * is per-(cell, label) candidates — Σ|cell ∩ label|² ≈
+    * n^1.5/|labels| — cheaper than the unfiltered build; memory is
+    * +degree edges per node, the same contract. One stitched graph
+    * serves every label.
+    */
+  private def labelStitchedAdjacency(baseL: DataFrame, degree: Int): DataFrame = {
+    // (cell, label) is the candidate grain: cellAdjacency over that key
+    val labelCell = cellAdjacency(
+      baseL.withColumn("cell", struct(col("cell"), col("label"))), degree)
     val wChain = Window.partitionBy(col("label")).orderBy(col("vec_id"))
     val labelChain = baseL
       .withColumn("nxt", lead(col("vec_id"), 1).over(wChain))
       .filter(col("nxt").isNotNull)
-      .select(col("vec_id").as("src"), col("nxt").as("dst"))
-    labelCellEdges.unionByName(labelChain)
-  }
-
-  /** Every (query, centroid node) scored and rank-numbered (`er`) — the
-    * multi-entry ranking whose prefixes are the entry sets. Centroid
-    * node ids are the first ⌈√n⌉ ids by [[cellKnnGraph]]'s quantizer
-    * construction; the ⌈√n⌉-row side broadcasts, the per-query rank is
-    * one bounded window. Checkpointed so every entry arm is a
-    * row-bounded read of the one ranking.
-    */
-  private def entryRanking(queries: DataFrame, nodeSide: DataFrame,
-                           base: DataFrame): DataFrame = {
-    val nCents = math.ceil(math.sqrt(base.count().toDouble)).toInt
-    val wE = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("node"))
-    queries
-      .crossJoin(broadcast(
-        nodeSide.filter(col("node") < nCents)
-          .select(col("node"), col("n_emb"), col("n_norm"))))
-      .withColumn("cosine",
-        expr(dotExpr("n_emb", "q_emb")) / (col("n_norm") * col("q_norm")))
-      .withColumn("er", row_number().over(wE))
-      .select(col("query_id"), col("node"), col("cosine"), col("er"))
-      .localCheckpoint(true)
-  }
-
-  /** The filtered walk kernel — [[beamRounds]] with en-route collection
-    * AND result-driven expansion (the Filtered-DiskANN search shape):
-    * each round expands TWO frontiers — the unfiltered routing beam
-    * (exactly the plain walk's, so navigation toward the query never
-    * degrades), and the top-`beam` MATCHED nodes collected so far, whose
-    * neighborhoods are where further matches cluster. A routing-only
-    * walk converges to the query's top unfiltered neighbors and stalls
-    * near recall ~0.8 on a 10%-selective predicate (measured): the k-th
-    * best MATCH sits at global rank ~k/selectivity, outside the greedy
-    * basin — expanding around found matches is what reaches its
-    * neighbors. Scored rows whose label matches accumulate into the
-    * result pool; the pool's top-`beam` feeds next round's matched
-    * frontier. Frontier stays ≤ 2·beam rows per query; the pool is
-    * bounded by rounds · |queries| · 2·beam·(degree+2) rows before label
-    * thinning — frontier-sized, never corpus-sized.
-    */
-  private def filteredBeamRounds(queries: DataFrame, entry0: DataFrame,
-                                 edges: DataFrame, scoreSide: DataFrame,
-                                 labelValue: Int, beam: Int,
-                                 rounds: Int): DataFrame = {
-    var beamDf = entry0.localCheckpoint(true)
-    var pool: DataFrame = null
-    val wB = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("node"))
-    for (_ <- 1 to rounds) {
-      val matchedBeam =
-        if (pool == null) null
-        else pool.withColumn("brank", row_number().over(wB))
-          .filter(col("brank") <= beam)
-          .select(col("query_id"), col("node"))
-      val frontier = {
-        val b = beamDf.select(col("query_id"), col("node"))
-        if (matchedBeam == null) b else b.unionByName(matchedBeam)
-      }
-      // frontier-side broadcasts, the beamRounds posture: both frontiers
-      // are beam-bounded; edges/scoreSide are corpus-sized and stream
-      val expanded = broadcast(frontier)
-        .join(edges, col("node") === col("src"))
-        .select(col("query_id"), col("dst").as("node"))
-        .unionByName(frontier)
-        .distinct()
-      // ONE scoring pass per round feeds the pool and both frontiers
-      val scored = broadcast(expanded)
-        .join(scoreSide, Seq("node"))
-        .join(broadcast(queries), Seq("query_id"))
-        .withColumn("cosine",
-          expr(dotExpr("n_emb", "q_emb")) / (col("n_norm") * col("q_norm")))
-        .select(col("query_id"), col("node"), col("n_label"), col("cosine"))
-        .localCheckpoint(true)
-      val matched = scored.filter(col("n_label") === labelValue)
-        .select(col("query_id"), col("node"), col("cosine"))
-      pool = (if (pool == null) matched else pool.unionByName(matched))
-        .distinct().localCheckpoint(true)
-      beamDf = scored
-        .withColumn("brank", row_number().over(wB))
-        .filter(col("brank") <= beam)
-        .select(col("query_id"), col("node"), col("cosine"))
-        .localCheckpoint(true)
-    }
-    pool
+      .select(col("vec_id").as("src"), array(col("nxt")).as("dsts"))
+    labelCell.unionByName(labelChain)
   }
 
   /** The filtered walk's tuning card — [[ivfNprobeReport]]'s filtered
     * arms translated to the graph family: every ENTRIES arm walks ONE
-    * shared graph JOINTLY (frontier keyed by (method, query_id), the
-    * [[beamSweepOnGraph]] shape) at the family's serving beam, each
-    * arm's entry set a rank-prefix of ONE query-to-centroids ranking,
-    * and every arm graded against the SAME predicate-filtered exact
-    * truth. Entries is the knob that moves filtered recall (the beam
-    * saturates: a 10%-selective predicate's top-k matches live across
-    * the query's top FEW CELLS, not deeper in one cell), and the shipped
+    * shared graph JOINTLY (keys (arm, query), the [[beamSweepOnGraph]]
+    * shape) at the family's serving beam, each arm's entry set a
+    * rank-prefix of ONE query-to-centroids ranking, and every arm graded
+    * against the SAME predicate-filtered exact truth. Entries is the
+    * knob that moves filtered recall (the beam saturates: a
+    * 10%-selective predicate's top-k matches live across the query's
+    * top FEW CELLS, not deeper in one cell), and the shipped
     * [[filteredGraphTopK]] default is read off this curve, not assumed.
     */
   def graphFilteredBeamReport(spark: SparkSession, emb: DataFrame,
@@ -1762,68 +1751,11 @@ object Similarity {
                                 Seq((1, 8), (4, 16), (8, 32), (16, 64)),
                               rounds: Int = 6): DataFrame = {
     import spark.implicits._
-    val (base, edges0) = cellKnnGraph(emb, degree, 0)
-    val edges = edges0.unionByName(labelStitchedEdges(base, emb, degree))
-      .distinct().localCheckpoint(true)
-    val nodeSide = labeledNodeSide(base, emb)
-    val queriesLite = base.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("norm").as("q_norm"))
-    val armDf = arms
-      .map { case (e, b) => (f"filtered_e$e%02d_b$b%03d", e, b) }
-      .toDF("method", "entries", "beam")
-    val ranking = entryRanking(queriesLite, nodeSide, base)
-    val entry0 = ranking.crossJoin(broadcast(armDf))
-      .filter(col("er") <= col("entries"))
-      .select(col("method"), col("beam"), col("query_id"), col("node"),
-        col("cosine"))
-    var beamDf = entry0.localCheckpoint(true)
-    var pool: DataFrame = null
-    val wB = Window.partitionBy(col("method"), col("query_id"))
-      .orderBy(col("cosine").desc, col("node"))
-    for (_ <- 1 to rounds) {
-      // two frontiers per arm, the filteredBeamRounds shape: the
-      // unfiltered routing beam + the arm's top-beam matched pool
-      val matchedBeam =
-        if (pool == null) null
-        else pool.join(broadcast(armDf), Seq("method"))
-          .withColumn("brank", row_number().over(wB))
-          .filter(col("brank") <= col("beam"))
-          .select(col("method"), col("beam"), col("query_id"), col("node"))
-      val frontier = {
-        val b = beamDf.select(col("method"), col("beam"), col("query_id"),
-          col("node"))
-        if (matchedBeam == null) b else b.unionByName(matchedBeam)
-      }
-      // frontier-side broadcasts, the beamRounds posture
-      val expanded = broadcast(frontier)
-        .join(edges, col("node") === col("src"))
-        .select(col("method"), col("beam"), col("query_id"),
-          col("dst").as("node"))
-        .unionByName(frontier)
-        .distinct()
-      val scored = broadcast(expanded)
-        .join(nodeSide, Seq("node"))
-        .join(broadcast(queriesLite), Seq("query_id"))
-        .withColumn("cosine",
-          expr(dotExpr("n_emb", "q_emb")) / (col("n_norm") * col("q_norm")))
-        .select(col("method"), col("beam"), col("query_id"), col("node"),
-          col("n_label"), col("cosine"))
-        .localCheckpoint(true)
-      val matched = scored.filter(col("n_label") === labelValue)
-        .select(col("method"), col("query_id"), col("node"), col("cosine"))
-      pool = (if (pool == null) matched else pool.unionByName(matched))
-        .distinct().localCheckpoint(true)
-      beamDf = scored
-        .withColumn("brank", row_number().over(wB))
-        .filter(col("brank") <= col("beam"))
-        .select(col("method"), col("beam"), col("query_id"), col("node"),
-          col("cosine"))
-        .localCheckpoint(true)
-    }
+    val named = arms.map { case (e, b) => (f"filtered_e$e%02d_b$b%03d", e, b) }
+    val pool = filteredPools(emb, labelValue, numQueries, degree, 0, named, rounds)
     val wK = Window.partitionBy(col("method"), col("query_id"))
       .orderBy(col("cosine").desc, col("node"))
-    val topk = pool.distinct()
+    val topk = pool
       .filter(col("node") =!= col("query_id"))
       .withColumn("rank", row_number().over(wK))
       .filter(col("rank") <= k)
@@ -1837,7 +1769,7 @@ object Similarity {
       s"graphFilteredBeamReport: label=$labelValue yields no filtered truth")
     val hits = topk.join(truth, Seq("query_id", "node"), "left_semi")
       .groupBy(col("method")).agg(count(lit(1)).as("n_hits"))
-    armDf.select(col("method")).join(hits, Seq("method"), "left")
+    named.map(_._1).toDF("method").join(hits, Seq("method"), "left")
       .withColumn("n_hits", coalesce(col("n_hits"), lit(0L)))
       .select(col("method"), lit(nTruth).as("n_truth"), col("n_hits"),
         (col("n_hits").cast("double") / nTruth.toDouble).as("recall"))
@@ -1963,12 +1895,12 @@ object Similarity {
                       widths: Seq[Int] = Seq(2, 8, 24),
                       pqWidths: Seq[Int] = Seq(24, 48, 96),
                       m: Int = 8, ksub: Int = 16, dim: Int = 64): DataFrame = {
-    val (base, edges) = cellKnnGraph(emb, degree, centroids = 0)
+    val (base, adj) = cellKnnGraph(emb, degree, centroids = 0)
     val recon =
       if (pqWidths.isEmpty) null else pqReconSide(emb, m, ksub, dim)
     val arms = widths.map(w => (f"beam_$w%02d", "x", w)) ++
       pqWidths.map(w => (f"graphpq_$w%02d", "q", w))
-    val swept = beamSweepOnGraph(spark, base, edges, recon, arms,
+    val swept = beamSweepOnGraph(spark, base, adj, recon, arms,
       numQueries, k, rounds)
     truthHits(spark, emb, numQueries, k)(arms.map { case (name, _, _) =>
       name -> swept.filter(col("method") === name) })
@@ -2172,25 +2104,15 @@ object Similarity {
     val arms = Seq(("cells_half", math.ceil(c0 / 2.0).toInt),
       ("cells_sqrt", c0), ("cells_double", 2 * c0))
     val walks = arms.map { case (name, nc) =>
-      val (base, edges) = cellKnnGraph(emb, degree, nc)
+      val (base, adj) = cellKnnGraph(emb, degree, nc)
       // the build-cost census: candidate-join rows actually paid
       val pairs = base.groupBy(col("cell")).agg(count(lit(1)).as("cn"))
         .agg(sum(expr("cn * (cn - 1)")).cast("long")).collect()(0).getLong(0)
       // walk WITHOUT the per-arm truth join: the card grades every arm
       // against truthHitsCard's ONE shared truth below
-      val queries = base.filter(col("vec_id") < numQueries)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-          col("norm").as("q_norm"), col("cell"))
-      val nodeSide = base.select(col("vec_id").as("node"),
-        col("embedding").as("n_emb"), col("norm").as("n_norm"))
-      val entry0 = broadcast(queries).join(nodeSide, col("node") === col("cell"))
-        .withColumn("cosine",
-          expr(dotExpr("n_emb", "q_emb")) / (col("n_norm") * col("q_norm")))
-        .select(col("query_id"), col("node"), col("cosine"))
-      val walk = beamTopKOnly(
-          beamRounds(queries, entry0, edges, nodeSide, beam, rounds), k)
+      val hits = beamTopKOnly(exactGraphWalk(base, adj, numQueries, beam, rounds), k)
         .select(col("query_id"), col("neighbor_id"))
-      (name, nc.toLong, pairs, walk)
+      (name, nc.toLong, pairs, hits)
     }
     val census = walks.map { case (m, nc, p, _) => (m, nc, p) }
       .toDF("method", "cells", "build_pairs")
@@ -2283,8 +2205,8 @@ object Similarity {
     */
   def recallReport(spark: SparkSession, emb: DataFrame,
                    numQueries: Int = 16, k: Int = 3): DataFrame = {
-    val (base, edges) = cellKnnGraph(emb, degree = 6, centroids = 0)
-    val swept = beamSweepOnGraph(spark, base, edges, pqReconSide(emb),
+    val (base, adj) = cellKnnGraph(emb, degree = 6, centroids = 0)
+    val swept = beamSweepOnGraph(spark, base, adj, pqReconSide(emb),
       Seq(("beam_graph", "x", 8), ("graph_pq", "q", 96)),
       numQueries, k, rounds = 6)
     truthHits(spark, emb, numQueries, k)(Seq(
@@ -2834,35 +2756,33 @@ object Similarity {
                        beam: Int, rounds: Int): DataFrame = {
     // the metadata read doubles as the "index exists" gate
     readGraphMeta(spark, metaTable)
-    val cents = centroidTable.read(spark, centroidSchema)
-    val nodes = nodeTable.read(spark, assignSchema).localCheckpoint(true)
-    // chain edges derived from the CURRENT id set (connectivity fallback,
-    // never persisted); graph edges explode off the adjacency rows
-    val ids = nodes.select(col("vec_id"))
-    val chain = ids.select(col("vec_id").as("src"), (col("vec_id") + 1).as("dst"))
-      .join(ids.withColumnRenamed("vec_id", "dst"), Seq("dst"), "left_semi")
-    val edges = adjTable.read(spark, graphAdjSchema)
-      .select(col("src"), explode(col("dsts")).as("dst"))
-      .unionByName(chain).distinct().localCheckpoint(true)
-    // queries assigned against the frozen persisted centroids (in
-    // production the query side is external — `emb` supplies vectors only)
-    val queries = withNearestCent(
-        withNorm(emb).filter(col("vec_id") < numQueries),
-        collectCentRows(cents, "c_id", "c", None), "embedding",
-        rowNormCol = Some("norm"), storedNorm = false)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("norm").as("q_norm"), col("c_id").as("cell"))
-    val nodeSide = nodes.select(col("vec_id").as("node"),
-      col("embedding").as("n_emb"), col("norm").as("n_norm"))
-    val entry0 = broadcast(queries).join(nodeSide, col("node") === col("cell"))
-      .withColumn("cosine",
-        expr(dotExpr("n_emb", "q_emb")) / (col("n_norm") * col("q_norm")))
-      .select(col("query_id"), col("node"), col("cosine"))
-    val beamDf = beamRounds(queries, entry0, edges, nodeSide, beam, rounds)
+    val nodes = nodeTable.read(spark, assignSchema)
+    val beamDf = cellEntryWalk(
+      walkSide(nodeSideOf(nodes), indexAdjacency(spark, nodes, adjTable)),
+      indexQueries(spark, emb, centroidTable, numQueries), beam, rounds)
     // truth comes off the index itself — it stores every vector
     beamTopKWithTruth(beamDf, nodes.select(col("vec_id"), col("embedding")),
       numQueries, k)
   }
+
+  /** The persisted adjacency rows (already neighbour lists) plus the
+    * chain rows of the CURRENT id set. */
+  private def indexAdjacency(spark: SparkSession, nodes: DataFrame,
+                             adjTable: graft.stages.MergeTable): DataFrame =
+    adjTable.read(spark, graphAdjSchema).unionByName(chainRows(nodes))
+
+  /** Queries assigned against the frozen persisted centroids (in
+    * production the query side is external — `emb` supplies vectors
+    * only): (query_id, q_emb, q_norm, cell). */
+  private def indexQueries(spark: SparkSession, emb: DataFrame,
+                           centroidTable: graft.stages.MergeTable,
+                           numQueries: Int): DataFrame =
+    withNearestCent(
+        withNorm(emb).filter(col("vec_id") < numQueries),
+        collectCentRows(centroidTable.read(spark, centroidSchema), "c_id", "c", None),
+        "embedding", rowNormCol = Some("norm"), storedNorm = false)
+      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
+        col("norm").as("q_norm"), col("c_id").as("cell"))
 
   /** DiskANN served FROM TABLES — the full deployment shape of the
     * composition [[graphPqTopK]] demonstrates in one lineage: the WALK
@@ -2888,16 +2808,8 @@ object Similarity {
                          codeTable: graft.stages.MergeTable,
                          numQueries: Int, k: Int, beam: Int, rounds: Int,
                          m: Int = 8, ksub: Int = 16, dim: Int = 64): DataFrame = {
-    import org.apache.spark.sql.functions.typedLit
     readGraphMeta(spark, metaTable)
-    val cents = centroidTable.read(spark, centroidSchema)
-    val nodes = nodeTable.read(spark, assignSchema).localCheckpoint(true)
-    val ids = nodes.select(col("vec_id"))
-    val chain = ids.select(col("vec_id").as("src"), (col("vec_id") + 1).as("dst"))
-      .join(ids.withColumnRenamed("vec_id", "dst"), Seq("dst"), "left_semi")
-    val edges = adjTable.read(spark, graphAdjSchema)
-      .select(col("src"), explode(col("dsts")).as("dst"))
-      .unionByName(chain).distinct().localCheckpoint(true)
+    val nodes = nodeTable.read(spark, assignSchema)
     // resident scoring side: reconstructions decoded FROM THE CODES
     // against the broadcast codebook literal (the ADC serving contract)
     val cb = readPqCodebook(spark, codebookTable, m, dim / m)
@@ -2909,43 +2821,12 @@ object Similarity {
       .withColumn("recon_norm", expr(s"sqrt(${dotExpr("pq_recon", "pq_recon")})"))
       .select(col("vec_id").as("node"), col("pq_recon").as("n_emb"),
         col("recon_norm").as("n_norm"))
-      .localCheckpoint(true)
-    val queries = withNearestCent(
-        withNorm(emb).filter(col("vec_id") < numQueries),
-        collectCentRows(cents, "c_id", "c", None), "embedding",
-        rowNormCol = Some("norm"), storedNorm = false)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("norm").as("q_norm"), col("c_id").as("cell"))
-    val entry0 = broadcast(queries).join(recon, col("node") === col("cell"))
-      .withColumn("cosine",
-        expr(dotExpr("n_emb", "q_emb")) / (col("n_norm") * col("q_norm")))
-      .select(col("query_id"), col("node"), col("cosine"))
-    val beamDf = beamRounds(queries, entry0, edges, recon, beam, rounds)
+    val queries = indexQueries(spark, emb, centroidTable, numQueries)
+    val beamDf = cellEntryWalk(
+      walkSide(recon, indexAdjacency(spark, nodes, adjTable)), queries, beam, rounds)
     // exact rerank + truth both read the NODE TABLE (it stores every
-    // vector) — the serve plan never touches the source corpus; the
-    // bounded final beam broadcasts, the full-vector side streams
-    val nodeSide = nodes.select(col("vec_id").as("node"),
-      col("embedding").as("n_emb"), col("norm").as("n_norm"))
-    val wK = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("node"))
-    val reranked = broadcast(beamDf
-        .select(col("query_id"), col("node"), col("cosine").as("cosine_pq"))
-        .filter(col("node") =!= col("query_id")))
-      .join(nodeSide, Seq("node"))
-      .join(broadcast(queries), Seq("query_id"))
-      .withColumn("cosine",
-        expr(dotExpr("n_emb", "q_emb")) / (col("n_norm") * col("q_norm")))
-      .withColumn("rank", row_number().over(wK))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col("node").as("neighbor_id"), col("cosine_pq"), col("cosine"))
-    val truth = bruteForceTopK(nodes.select(col("vec_id"), col("embedding")),
-        numQueries, k)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("_hit"))
-    reranked
-      .join(truth, Seq("query_id", "neighbor_id"), "left")
-      .withColumn("exact_hit", coalesce(col("_hit"), lit(0)))
-      .drop("_hit")
+    // vector) — the serve plan never touches the source corpus
+    exactRerankWithTruth(beamDf, nodes, queries, numQueries, k)
   }
 
   /** Persisted PQ index — the quantization ladder's lifecycle twin of

@@ -733,14 +733,14 @@ object SimilarityQueries {
        |  WHERE rank <= $k)""".stripMargin
 
   /** One filtered-walk arm's round CTEs (prefix-named so arms coexist in
-    * one WITH) — Similarity.filteredBeamRounds verbatim: the frontier
-    * f_r unions the routing beam b_{r-1} with the top-beam of the
-    * matched pool p_{r-1} (result-driven expansion, the
+    * one WITH) — the filtered walk of Similarity's walk kernel
+    * verbatim: the frontier f_r unions the routing beam b_{r-1} with the
+    * top-beam of the matched pool p_{r-1} (result-driven expansion, the
     * Filtered-DiskANN search shape), e_r expands it one hop, s_r scores
     * the whole expanded set (materialized — it feeds the pool and both
-    * frontiers), p_r accumulates the label matches (UNION == the Spark
-    * distinct), and b_r is the unfiltered routing cut. The arm's
-    * `${p}pool` is p_rounds.
+    * frontiers), p_r accumulates the label matches (UNION == the
+    * driver's pool set), and b_r is the unfiltered routing cut. The
+    * arm's `${p}pool` is p_rounds.
     */
   private def filteredArmCtes(p: String, labelValue: Int, entries: Int,
                               beam: Int, rounds: Int): String = {
@@ -2316,8 +2316,8 @@ object SimilarityQueries {
         "(0.96/0.96 at sf0.01/sf0.1)"),
 
     // ---- The filtered walk's tuning card: (entries, beam) arms walk ONE
-    // shared stitched graph jointly (the beamSweepOnGraph frontier
-    // shape), graded against the SAME predicate-filtered exact truth as
+    // shared stitched graph jointly (the beamSweepOnGraph (arm, query)
+    // walk keys), graded against the SAME predicate-filtered exact truth as
     // the IVF filtered card. The two knobs must scale together (entries
     // past the beam are pruned in round 1 — measured), so the arms climb
     // the diagonal; sim_graph_filtered_topk ships the measured knee.
@@ -3104,8 +3104,9 @@ object SimilarityQueries {
     // connectivity edge), ⌈√n⌉ cells so the within-cell build join stays
     // √n-bounded per cell at any scale, searched by per-query greedy beam
     // expansion ENTERING AT THE QUERY'S OWN CELL centroid — the serving
-    // shape where NO corpus scan happens per query, only frontier-sized
-    // joins against the resident n·(degree+1)-row edge table. Brute-truth
+    // shape where no query scores the corpus: each round scores only the
+    // frontier's candidates, in one scan of the resident score side
+    // shared by every query. Brute-truth
     // flags measure the recall the 6-round budget buys.
     GQuery("sim_ann_beam_graph",
       (s, dir) => Similarity.beamSearchTopK(s, Tables.embeddings(s, dir),

@@ -505,6 +505,31 @@ class LakeSpec extends AnyFunSuite {
     assert(sql(s"SELECT count(*) FROM $t").collect().head.getLong(0) == 47L)
   }
 
+  test("DROP COLUMN of a pending DV predicate's own column names the column and the remedy") {
+    val t = freshTable(); val tn = n
+    val mt = new graft.stages.MergeTable(
+      Paths.get(spark.conf.get("spark.sql.catalog.lakespec.warehouse"),
+        "db", s"t$tn").toString, Seq.empty)
+    sql(s"CREATE TABLE $t (k BIGINT, v BIGINT, w BIGINT) " +
+      s"TBLPROPERTIES ('${graft.lake.GraftTable.DvDeleteMaxRowsProp}' = '10')")
+    for (b <- 0 until 2)
+      sql(s"INSERT INTO $t SELECT id, id, id FROM range(${b * 25}, ${(b + 1) * 25}, 1, 1)")
+    sql(s"DELETE FROM $t WHERE v >= 10 AND v < 13")
+    assert(mt.pendingDeleteVectors.isDefined)
+    // v is the pending predicate's column: dropping it would orphan the
+    // predicate's bind and block every later read
+    val e = intercept[IllegalStateException](sql(s"ALTER TABLE $t DROP COLUMN v"))
+    assert(e.getMessage.contains("cannot drop column v"), e.getMessage)
+    assert(e.getMessage.contains("run reconcileDeletes first"), e.getMessage)
+    // refused before any change: the schema and the pending read hold
+    assert(spark.table(t).schema.fieldNames.toSeq == Seq("k", "v", "w"))
+    assert(sql(s"SELECT count(*) FROM $t").collect().head.getLong(0) == 47L)
+    mt.reconcileDeletes(spark)
+    sql(s"ALTER TABLE $t DROP COLUMN v")
+    assert(spark.table(t).schema.fieldNames.toSeq == Seq("k", "w"))
+    assert(sql(s"SELECT count(*) FROM $t").collect().head.getLong(0) == 47L)
+  }
+
   test("DV filter translators agree: Column path == bound-expression path on every supported shape") {
     import org.apache.spark.sql.sources._
     import org.apache.spark.sql.types._

@@ -707,4 +707,199 @@ class SimilaritySpec extends AnyFunSuite {
     assert(c3.getLong(3) == 0L && !f3,
       "repair from stored vectors must re-assign to coherence")
   }
+
+  // ---- the walk kernel against a plain-Scala reference walk ----
+
+  /** 120 deterministic 64-d vectors around 6 centres; labels vec_id % 3. */
+  private lazy val walkVecs: IndexedSeq[Array[Float]] = {
+    val rnd = new scala.util.Random(11)
+    val centres = IndexedSeq.fill(6)(Array.fill(64)(rnd.nextGaussian()))
+    IndexedSeq.fill(120)(centres(rnd.nextInt(6)).map(c => (c + 0.7 * rnd.nextGaussian()).toFloat))
+  }
+
+  private def walkEmb = {
+    import spark.implicits._
+    walkVecs.zipWithIndex.map { case (v, i) => (i.toLong, v, i % 3) }
+      .toDF("vec_id", "embedding", "label")
+  }
+
+  /** The walk as the DuckDB mirrors define it (`beamGraphSql`,
+    * `filteredArmCtes`), in plain Scala over the collected vectors: the
+    * first ⌈√n⌉ ids as cells, within-cell top-`degree` edges plus the id
+    * chain (and, stitched, the same-label edges and per-label chain), and
+    * every round unrolled — no early stop. */
+  private final class RefWalk(val vecs: IndexedSeq[Array[Double]], degree: Int) {
+    val n: Int = vecs.size
+    def dot(a: Array[Double], b: Array[Double]): Double = {
+      var s = 0.0; var i = 0
+      while (i < a.length) { s += a(i) * b(i); i += 1 }
+      s
+    }
+    val norm: IndexedSeq[Double] = vecs.map(v => math.sqrt(dot(v, v)))
+    def cos(a: Int, b: Int): Double = dot(vecs(a), vecs(b)) / (norm(a) * norm(b))
+    def best(score: Int => Double, ids: Iterable[Int], w: Int): Seq[Int] =
+      ids.toSeq.sortBy(i => (-score(i), i)).take(w)
+    val nCents: Int = math.ceil(math.sqrt(n.toDouble)).toInt
+    val cell: IndexedSeq[Int] = (0 until n).map(i => best(cos(i, _), 0 until nCents, 1).head)
+    private def knn(same: (Int, Int) => Boolean): Map[Int, Seq[Int]] =
+      (0 until n).map(s => s -> best(cos(s, _), (0 until n).filter(d => d != s && same(s, d)), degree)).toMap
+    private def union(a: Map[Int, Seq[Int]], b: Map[Int, Seq[Int]]) =
+      (a.keySet ++ b.keySet).map(s => s -> (a.getOrElse(s, Nil) ++ b.getOrElse(s, Nil)).distinct).toMap
+    val plain: Map[Int, Seq[Int]] =
+      union(knn((s, d) => cell(s) == cell(d)), (0 until n - 1).map(s => s -> Seq(s + 1)).toMap)
+    def stitched(label: Int => Int): Map[Int, Seq[Int]] =
+      union(union(plain, knn((s, d) => cell(s) == cell(d) && label(s) == label(d))),
+        (0 until n).flatMap(s => (s + 1 until n).find(d => label(d) == label(s)).map(s -> Seq(_))).toMap)
+
+    /** (final frontier, pool) of one query's walk scored by `score`. */
+    def walk(score: Int => Double, entry: Seq[Int], entries: Int, beam: Int, rounds: Int,
+             adj: Map[Int, Seq[Int]], matches: Int => Boolean = _ => false): (Seq[Int], Set[Int]) = {
+      var b = best(score, entry, entries)
+      var pool = Set.empty[Int]
+      for (_ <- 1 to rounds) {
+        val f = b ++ best(score, pool, beam)
+        val e = (f ++ f.flatMap(adj.getOrElse(_, Nil))).distinct
+        pool ++= e.filter(matches)
+        b = best(score, e, beam)
+      }
+      (b, pool)
+    }
+
+    /** (query, rank, neighbour, cosine) of the exact top k of `found`,
+      * self excluded. */
+    def topK(q: Int, found: Iterable[Int], k: Int): Seq[(Long, Int, Long, Double)] =
+      best(cos(q, _), found.filter(_ != q), k).zipWithIndex
+        .map { case (nb, r) => (q.toLong, r + 1, nb.toLong, cos(q, nb)) }
+  }
+
+  private def refOf(degree: Int) = new RefWalk(walkVecs.map(_.map(_.toDouble)), degree)
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int, Long, Double)] =
+    df.collect().toSeq.map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank"),
+      r.getAs[Long]("neighbor_id"), r.getAs[Double]("cosine"))).sorted
+
+  test("walk kernel equals the reference walk: beamSearchTopK, graphIndexSearch, graphPqTopK, filteredGraphTopK") {
+    val nq = 8; val k = 3; val degree = 4; val beam = 4; val rounds = 3
+    val ref = refOf(degree)
+    val truth = (0 until nq).flatMap(q => ref.topK(q, 0 until ref.n, k).map(t => (t._1, t._3))).toSet
+    def plainRef(rounds: Int) = (0 until nq).flatMap { q =>
+      ref.topK(q, ref.walk(ref.cos(q, _), Seq(ref.cell(q)), 1, beam, rounds, ref.plain)._1, k)
+    }.sorted
+    def flagged(df: org.apache.spark.sql.DataFrame) = {
+      val rows = df.collect().toSeq
+      rows.foreach(r => assert(r.getAs[Int]("exact_hit") ==
+        (if (truth((r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")))) 1 else 0)))
+      rowsOf(df)
+    }
+    val want = plainRef(rounds)
+    assert(want.size == nq * k)
+    assert(flagged(Similarity.beamSearchTopK(spark, walkEmb, nq, k, degree, beam, rounds)) == want)
+
+    // the persisted index built over the whole fixture is the same graph
+    def scr(key: String) = graft.stages.MergeTable.scratch(Seq(key))
+    val (centT, nodeT, adjT, metaT) = (scr("c_id"), scr("vec_id"), scr("src"), scr("key"))
+    Similarity.graphIndexBuild(spark, walkEmb, centT, nodeT, adjT, metaT,
+      centroidIdBound = ref.nCents, degree = degree)
+    assert(flagged(Similarity.graphIndexSearch(spark, walkEmb, centT, nodeT, adjT, metaT,
+      nq, k, beam, rounds)) == want)
+
+    // PQ-scored walk on the collected reconstructions, exact rerank
+    val recon = Similarity.pqReconSide(walkEmb).collect()
+      .map(r => r.getLong(0).toInt -> (r.getSeq[Double](1).toArray, r.getDouble(2))).toMap
+    def pqScore(q: Int)(nd: Int) = ref.dot(recon(nd)._1, ref.vecs(q)) / (recon(nd)._2 * ref.norm(q))
+    val pqWant = (0 until nq).flatMap { q =>
+      ref.topK(q, ref.walk(pqScore(q), Seq(ref.cell(q)), 1, beam, rounds, ref.plain)._1, k)
+    }.sorted
+    val pq = Similarity.graphPqTopK(spark, walkEmb, nq, k, degree, beam, rounds)
+    assert(flagged(pq) == pqWant)
+    pq.collect().foreach(r => assert(r.getAs[Double]("cosine_pq") ==
+      pqScore(r.getAs[Long]("query_id").toInt)(r.getAs[Long]("neighbor_id").toInt)))
+
+    // filtered: multi-entry over the centroid nodes, matched-pool frontier
+    val label = 1; val entries = 3
+    val stitched = ref.stitched(_ % 3)
+    val fTruth = (0 until nq).flatMap(q => ref.topK(q, (0 until ref.n).filter(_ % 3 == label), k)
+      .map(t => (t._1, t._3))).toSet
+    def filteredRef(rounds: Int) = (0 until nq).flatMap { q =>
+      ref.topK(q, ref.walk(ref.cos(q, _), 0 until ref.nCents, entries, beam, rounds,
+        stitched, _ % 3 == label)._2, k)
+    }.sorted
+    val filtered = Similarity.filteredGraphTopK(spark, walkEmb, label, nq, k, degree, beam,
+      rounds, entries)
+    filtered.collect().foreach(r => assert(r.getAs[Int]("exact_hit") ==
+      (if (fTruth((r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")))) 1 else 0)))
+    assert(rowsOf(filtered) == filteredRef(rounds))
+
+    // rounds = 50: the per-key stop must not change the answer, and 50
+    // rounds is the fixed point the reference reaches on its own
+    val plain50 = plainRef(50)
+    assert(plain50 == plainRef(51))
+    assert(rowsOf(Similarity.beamSearchTopK(spark, walkEmb, nq, k, degree, beam, 50)) == plain50)
+    val filtered50 = filteredRef(50)
+    assert(filtered50 == filteredRef(51))
+    assert(rowsOf(Similarity.filteredGraphTopK(spark, walkEmb, label, nq, k, degree, beam,
+      50, entries)) == filtered50)
+  }
+
+  test("walk kernel equals the reference walk on every beamSweepOnGraph arm") {
+    import org.apache.spark.sql.functions.col
+    val nq = 8; val k = 3; val degree = 4; val rounds = 3
+    val ref = refOf(degree)
+    val recon = Similarity.pqReconSide(walkEmb)
+    val reconRows = recon.collect()
+      .map(r => r.getLong(0).toInt -> (r.getSeq[Double](1).toArray, r.getDouble(2))).toMap
+    def pqScore(q: Int)(nd: Int) =
+      ref.dot(reconRows(nd)._1, ref.vecs(q)) / (reconRows(nd)._2 * ref.norm(q))
+    val arms = Seq(("x2", "x", 2), ("x6", "x", 6), ("q6", "q", 6), ("q12", "q", 12))
+    val (base, adj) = Similarity.cellKnnGraph(walkEmb, degree, 0)
+    val swept = Similarity.beamSweepOnGraph(spark, base, adj, recon, arms, nq, k, rounds)
+    arms.foreach { case (method, fam, beam) =>
+      val want = (0 until nq).flatMap { q =>
+        val score: Int => Double = if (fam == "x") ref.cos(q, _) else pqScore(q)
+        ref.topK(q, ref.walk(score, Seq(ref.cell(q)), 1, beam, rounds, ref.plain)._1, k)
+      }.sorted
+      assert(rowsOf(swept.filter(col("method") === method)) == want, method)
+    }
+  }
+
+  test("walk order equals Spark's row_number order: NaN, signed zeros, null, id ties") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, row_number}
+    val cands: Seq[(Long, Option[Double])] = Seq(5L -> Some(0.5), 3L -> Some(Double.NaN),
+      9L -> None, 2L -> Some(-0.0), 1L -> Some(0.0), 7L -> Some(0.5), 4L -> Some(-1.0),
+      8L -> Some(Double.NaN), 6L -> None, 0L -> Some(0.5), 10L -> Some(Double.NegativeInfinity))
+    val bySpark = cands.toDF("node", "cosine")
+      .withColumn("r", row_number().over(Window.orderBy(col("cosine").desc, col("node"))))
+      .orderBy("r").collect().map(_.getLong(0)).toSeq
+    val byDriver = cands
+      .map { case (n, c) => (c.map(java.lang.Double.valueOf).orNull, n) }
+      .sorted(Similarity.walkOrder).map(_._2)
+    assert(byDriver == bySpark)
+    assert(byDriver == Seq(3L, 8L, 0L, 5L, 7L, 1L, 2L, 4L, 10L, 6L, 9L))
+  }
+
+  test("graphIndexSearch job budget: one scoring job per round, every job inside a SQL execution") {
+    val nq = 8; val k = 3; val degree = 4; val beam = 4; val rounds = 3
+    def scr(key: String) = graft.stages.MergeTable.scratch(Seq(key))
+    val (centT, nodeT, adjT, metaT) = (scr("c_id"), scr("vec_id"), scr("src"), scr("key"))
+    Similarity.graphIndexBuild(spark, walkEmb, centT, nodeT, adjT, metaT,
+      centroidIdBound = 11, degree = degree)
+    def search(rounds: Int) = SparkJobs.during(spark)(
+      Similarity.graphIndexSearch(spark, walkEmb, centT, nodeT, adjT, metaT,
+        nq, k, beam, rounds).collect())._2
+    // the scoring collect is the one Similarity collect site that repeats
+    def scoringJobs(jobs: Seq[SparkJobs.Job]) =
+      jobs.filter(_.callSite.startsWith("collect at Similarity.scala"))
+        .groupBy(_.callSite).values.map(_.size).max
+    val jobs = search(rounds)
+    assert(jobs.forall(_.executionId.isDefined),
+      s"jobs outside a SQL execution: ${jobs.filter(_.executionId.isEmpty)}")
+    assert(scoringJobs(jobs) <= rounds + 1, jobs.map(_.callSite))
+    // 14 jobs measured on this fixture; the budget is that + 25%
+    assert(jobs.size <= 17, s"${jobs.size} jobs: ${jobs.map(_.callSite)}")
+    // every key reaches its fixed point within 3 rounds here, so a
+    // 50-round walk stops as early and submits no extra scoring job
+    assert(scoringJobs(search(50)) == scoringJobs(jobs))
+  }
 }
