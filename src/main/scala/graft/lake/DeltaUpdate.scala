@@ -239,15 +239,8 @@ private[lake] final class GraftDeltaUpdateWrite(table: GraftTable,
                 val n = p.getFileName.toString
                 !n.startsWith("_") && !n.startsWith(".") && n.endsWith(".parquet")
               }
-              .foreach { p =>
-                val dst = dvNext.resolve(
-                  s"mig-${java.util.UUID.randomUUID()}-${p.getFileName}")
-                try Files.createLink(dst, p)
-                catch {
-                  case _: UnsupportedOperationException |
-                       _: java.nio.file.FileSystemException => Files.copy(p, dst)
-                }
-              }
+              .foreach(p => graft.stages.MergeTable.linkOrCopy(p,
+                dvNext.resolve(s"mig-${java.util.UUID.randomUUID()}-${p.getFileName}")))
           } finally entries.close()
         }
         base.map(table.merge.dvSidecarPath).filter(Files.exists(_)).foreach { oldDv =>

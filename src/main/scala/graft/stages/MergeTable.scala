@@ -13,9 +13,11 @@ import org.apache.spark.sql.types.StructType
   *
   * Protocol (the same pointer-flip idea lakehouse formats use):
   *   1. every merge computes `existing ⊳⊲ batch` with the [[Merge]]
-  *      rewrites and writes it to a brand-new version directory `v<n>`;
-  *   2. only after the write fully succeeds is the `_CURRENT` pointer file
-  *      replaced — written to a temp name, then ATOMIC_MOVE'd over.
+  *      rewrites and writes it to a private staging directory;
+  *   2. one publish step, [[commitStagedFiles]], moves the finished stage
+  *      into a brand-new version directory `v<n>` under the commit lock
+  *      and only then replaces the `_CURRENT` pointer file — written to a
+  *      temp name, then ATOMIC_MOVE'd over.
   * A reader resolves `_CURRENT` first, so a crash anywhere before the flip
   * leaves the previous version intact and readable; a half-written `v<n>`
   * is invisible garbage, never corruption. Because the merges themselves
@@ -34,8 +36,8 @@ import org.apache.spark.sql.types.StructType
   * (the written DataFrame schema as JSON, DataFrame commits only). Spark's
   * file index skips both by their `_` prefix. Readers use `_SCHEMA` so
   * opening a version submits no schema-inference job, and fall back to
-  * parquet inference when it is missing (older versions,
-  * [[commitStagedFiles]] versions, shallow clones) — as `_STATS` readers
+  * parquet inference when it is missing (older versions, files staged by
+  * the [[graft.lake]] catalog, shallow clones) — as `_STATS` readers
   * fall back to footer reads.
   */
 final class MergeTable(val root: String, keys: Seq[String],
@@ -245,11 +247,11 @@ final class MergeTable(val root: String, keys: Seq[String],
     }
   }
 
-  private def requireNoPendingDeletes(base: Option[String], action: String): Unit =
+  private def requireNoPendingDeletes(base: Option[String]): Unit =
     base.filter(v => Files.exists(dvPath(v))).foreach { v =>
       throw new IllegalStateException(
         s"MergeTable $root: version $v has a pending deletion-vector sidecar; " +
-          s"a $action built from the bare version would resurrect deleted rows — " +
+          "a commit built from the bare version would resurrect deleted rows — " +
           "run reconcileDeletes() first")
     }
 
@@ -325,7 +327,7 @@ final class MergeTable(val root: String, keys: Seq[String],
   def reconcileDeletes(spark: SparkSession, numFiles: Int = 1): Unit =
     currentVersion.filter(v => Files.exists(dvPath(v))).foreach { v =>
       val folded = readWithDeletes(spark, new StructType()).repartition(numFiles)
-      commit(folded, pinnedBase = Some(Some(v)),
+      commit(folded, expectedBase = Some(Some(v)),
         foldsPendingDeletes = true, sizeOutput = false)(_ => folded)
     }
 
@@ -400,12 +402,8 @@ final class MergeTable(val root: String, keys: Seq[String],
     val token = java.util.UUID.randomUUID().toString
     val staged = Paths.get(destRoot, s"_stage_$token")
     Files.createDirectories(staged)
-    dataFiles(version).foreach { f =>
-      val dst = staged.resolve(f.getFileName.toString)
-      try Files.createLink(dst, f)
-      catch { case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-        Files.copy(f, dst) }
-    }
+    dataFiles(version).foreach(f =>
+      MergeTable.linkOrCopy(f, staged.resolve(f.getFileName.toString)))
     dest.commitStagedFiles(staged, carryForward = false, expectedBase = Some(None))
     dest
   }
@@ -476,97 +474,61 @@ final class MergeTable(val root: String, keys: Seq[String],
   private def mergeEvolved(existing: DataFrame, batch: DataFrame, evolve: Boolean)
                           (merge: (DataFrame, DataFrame) => DataFrame): DataFrame =
     if (!evolve) merge(existing, batch)
-    else {
-      import org.apache.spark.sql.functions.{col, lit}
-      def widen(df: DataFrame, to: StructType): DataFrame =
-        to.fields.foldLeft(df) { (d, f) =>
-          if (d.columns.contains(f.name)) d
-          else d.withColumn(f.name, lit(null).cast(f.dataType))
-        }
-      merge(widen(existing, batch.schema), widen(batch, existing.schema))
-    }
+    else merge(MergeTable.widen(existing, batch.schema), MergeTable.widen(batch, existing.schema))
 
-  /** Commit = stage + compare-and-swap flip.
-    *
-    * The merge output is written to a per-commit UNIQUE staging directory
-    * (two racing writers never write into the same path), then a short
-    * lock-protected critical section — pointer reads/renames only, no
-    * Spark work — re-reads `_CURRENT` and fails the flip if it moved since
-    * this commit read its base version. On a filesystem the lock is an
-    * atomic `createFile`; on an object store both the lock and the
-    * pointer move map onto conditional-put (if-none-match / if-match),
-    * exactly as Delta's LogStore does. The loser's staging directory is
-    * deleted; committed `v<n>` directories stay immutable.
+  /** Commit a DataFrame: merge over the base version, stage the output
+    * with its `_SCHEMA` sidecar under a per-commit UNIQUE directory (two
+    * racing writers never write into the same path), then publish it
+    * through [[commitStagedFiles]] — THE lock + compare-and-swap + move +
+    * flip every version goes through. The base read here is the CAS
+    * expectation, so a writer that flipped since fails this commit loudly
+    * with nothing committed.
     */
-  private def commit(batch: DataFrame, pinnedBase: Option[Option[String]] = None,
+  private def commit(batch: DataFrame, expectedBase: Option[Option[String]] = None,
                      foldsPendingDeletes: Boolean = false,
                      sizeOutput: Boolean = true)
                     (merge: Option[DataFrame] => DataFrame): Unit = {
     val spark = batch.sparkSession
-    // a pinned base makes the CAS cover the CALLER's read, not just this call
-    val base = pinnedBase.getOrElse(currentVersion)
-    // refuse to advance past unreconciled merge-on-read deletes: the new
-    // version would start sidecar-free and resurrect them (only the
-    // reconcile itself, which folds the sidecar, may pass)
-    if (!foldsPendingDeletes) requireNoPendingDeletes(base, "commit")
-    val next = s"v${base.map(_.drop(1).toLong + 1).getOrElse(0L)}"
-    val token = java.util.UUID.randomUUID().toString
-    val stage = Paths.get(root, s"_stage_$token")
-    // OptimizeWrite (r17, guide §6 / the Delta convention): size the
-    // version's files by bytes, not by the merge lineage's incidental
-    // partition count — an AQE REBALANCE shuffle before the write lets
-    // adaptive coalescing pack output to the advisory partition size
-    // (one file for the registry's small fixture tables instead of 32
-    // writer-inits ~100 ms each; still parallel, size-split at scale).
-    // Conf-off for callers that pre-partition deliberately.
+    // an expected base makes the CAS cover the CALLER's read, not just this call
+    val base = expectedBase.getOrElse(currentVersion)
+    // refuse to advance past unreconciled merge-on-read deletes BEFORE any
+    // Spark work: the new version would start sidecar-free and resurrect
+    // them (only the reconcile itself, which folds the sidecar, may pass)
+    if (!foldsPendingDeletes) requireNoPendingDeletes(base)
+    val stage = Paths.get(root, s"_stage_${java.util.UUID.randomUUID()}")
     val out0 = merge(base.map(scanVersion(spark, _)))
-    // callers that partition their output DELIBERATELY (compact's file
-    // count / clustering, reconcileDeletes' numFiles) pass
-    // sizeOutput = false — a rebalance would override their layout
-    val out = if (sizeOutput && spark.conf.getOption("graft.merge.optimizeWrite")
-        .forall(_.toBoolean)) out0.hint("rebalance") else out0
+    // OptimizeWrite (the Delta convention): an AQE REBALANCE before the
+    // write sizes the version's files by bytes, not by the merge lineage's
+    // incidental partition count (one file for a small table instead of 32
+    // writer-inits; still parallel, size-split at scale). Callers that
+    // partition their output DELIBERATELY (compact's file count /
+    // clustering, reconcileDeletes' numFiles) pass sizeOutput = false.
+    val out = if (sizeOutput) out0.hint("rebalance") else out0
     out.write.mode("overwrite").parquet(stage.toString)
-    // per-file stats manifest and the written schema, staged WITH the data
-    // (the atomic move below carries them into the version): a DataFrame
-    // commit rewrites every file, so each gets its one-and-only footer
-    // read here — outside the lock
-    writeStatsManifest(stage, carried = Map.empty)
     MergeTable.recordSchema(stage, out.schema)
-    val lock = Paths.get(root, "_COMMIT_LOCK")
-    try {
-      acquireCommitLock(lock, token)
-      try {
-        verifyLockOwner(lock, token)
-        if (currentVersion != base)
-          throw new java.util.ConcurrentModificationException(
-            s"MergeTable $root: _CURRENT moved from $base to $currentVersion " +
-              s"since this merge read it — concurrent writer won; re-run this batch")
-        // re-check under the lock: a DV appended since the entry check
-        // would otherwise be silently abandoned by this flip
-        if (!foldsPendingDeletes) requireNoPendingDeletes(base, "commit")
-        // a pre-existing v<next> is orphan garbage from a writer that died
-        // after its data write but before its flip (_CURRENT never pointed
-        // at it, and we hold the lock): supersede it
-        val target = Paths.get(root, next)
-        if (Files.exists(target)) TempDirs.deleteTree(target)
-        Files.move(stage, target, StandardCopyOption.ATOMIC_MOVE)
-        flipPointer(next, token)
-      } finally releaseLockIfOwner(lock, token)
-    } finally {
-      // loser cleanup: staged data never committed
-      if (Files.exists(stage)) TempDirs.deleteTree(stage)
-    }
+    commitStagedFiles(stage, carryForward = false, expectedBase = Some(base),
+      foldsPendingDeletes = foldsPendingDeletes)
   }
 
-  /** File-level commit for writers that already hold finished parquet part
-    * files (the [[graft.lake]] DSv2 catalog, whose EXECUTORS write the
-    * files — the driver only promotes them): the data files in `staged`
-    * become the next version under the same lock + CAS flip as the
-    * DataFrame commits. With `carryForward`, the base version's data
-    * files are hard-linked (copy fallback) into the staging directory
-    * BEFORE the lock is taken — O(files) metadata work, no data rewrite,
-    * and the critical section stays one directory rename plus the pointer
-    * flip, preserving the premise behind the lock-staleness threshold.
+  /** THE publish step: the data files in `staged` (plus any `_` sidecars
+    * staged with them) become the next version under the commit lock — a
+    * short critical section of pointer reads/renames only, no Spark work,
+    * that re-reads `_CURRENT`, fails if it moved since the caller's
+    * expected base, moves the stage into `v<n>` and flips the pointer. On
+    * a filesystem the lock is an atomic `createFile`; on an object store
+    * both the lock and the pointer move map onto conditional-put
+    * (if-none-match / if-match), exactly as Delta's LogStore does. The
+    * stage is deleted whatever the outcome; committed `v<n>` directories
+    * stay immutable. Every version is published here: the DataFrame
+    * commits ([[upsert]], [[replace]], [[compact]], …), the
+    * [[graft.lake]] DSv2 catalog (whose EXECUTORS write the files — the
+    * driver only promotes them) and [[cloneShallow]].
+    *
+    * With `carryForward`, the base version's data files are hard-linked
+    * (copy fallback) into the staging directory BEFORE the lock is taken —
+    * O(files) metadata work, no data rewrite, and the critical section
+    * stays one directory rename plus the pointer flip, preserving the
+    * premise behind the lock-staleness threshold.
     *
     * `expectedBase` pins the snapshot the caller PLANNED against
     * (`Some(None)` = planned against an empty table): if `_CURRENT` moved
@@ -597,14 +559,13 @@ final class MergeTable(val root: String, keys: Seq[String],
     val token = java.util.UUID.randomUUID().toString
     val lock = Paths.get(root, "_COMMIT_LOCK")
     try {
-      // same pending-sidecar refusal as the DataFrame commits: a staged
-      // commit that didn't fold the deletion vectors would resurrect
+      // a commit that didn't fold the deletion vectors would resurrect
       // merge-on-read-deleted rows (carried files still hold them; the
       // new version starts sidecar-free). A caller whose staged output
-      // WAS derived DV-aware (the catalog's DV-folding rewrite) passes
-      // foldsPendingDeletes = true.
+      // WAS derived DV-aware (the reconcile, the catalog's DV-folding
+      // rewrite) passes foldsPendingDeletes = true.
       if (!foldsPendingDeletes)
-        requireNoPendingDeletes(expectedBase.getOrElse(currentVersion), "staged commit")
+        requireNoPendingDeletes(expectedBase.getOrElse(currentVersion))
       // carry-forward link pass runs OUTSIDE the lock, against the base
       // the commit is pinned to (observed now if the caller didn't pin)
       val carriedBase = if (carryForward) expectedBase.getOrElse(currentVersion) else None
@@ -624,11 +585,7 @@ final class MergeTable(val root: String, keys: Seq[String],
             // files can't happen in practice; stay safe anyway
             val dst = if (Files.exists(preferred))
               staged.resolve(s"carried-$token-${f.getFileName}") else preferred
-            try Files.createLink(dst, f)
-            catch { case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-              // includes a vanished link source: the copy then throws
-              // NoSuchFileException into the outer conflict mapping
-              Files.copy(f, dst) }
+            MergeTable.linkOrCopy(f, dst)
             baseManifest.get(f.getFileName.toString)
               .foreach(st => carriedStats += dst.getFileName.toString -> st)
           }
@@ -651,9 +608,11 @@ final class MergeTable(val root: String, keys: Seq[String],
           if (base != eb)
             throw new java.util.ConcurrentModificationException(
               s"MergeTable $root: _CURRENT moved from $eb to $base since this " +
-                "write planned against it — concurrent writer won; re-run the statement")
+                "commit read it — concurrent writer won; re-run the batch or statement")
         }
-        if (!foldsPendingDeletes) requireNoPendingDeletes(base, "staged commit")
+        // re-check under the lock: a DV appended since the entry check
+        // would otherwise be silently abandoned by this flip
+        if (!foldsPendingDeletes) requireNoPendingDeletes(base)
         val next = s"v${base.map(_.drop(1).toLong + 1).getOrElse(0L)}"
         val target = Paths.get(root, next)
         if (Files.exists(target)) TempDirs.deleteTree(target)   // orphan from a dead writer
@@ -803,11 +762,7 @@ final class MergeTable(val root: String, keys: Seq[String],
         readSide(toFiles.map(_.toString)).getOrElse(spark.emptyDataFrame)
           .limit(0).withColumn("change_type", lit(""))
       case (oldOpt, newOpt) =>
-        def widen(df: DataFrame, to: StructType): DataFrame =
-          to.fields.foldLeft(df) { (d, f) =>
-            if (d.columns.contains(f.name)) d
-            else d.withColumn(f.name, lit(null).cast(f.dataType))
-          }
+        import MergeTable.widen
         val old0 = oldOpt.getOrElse(newOpt.get.limit(0))
         val new0 = newOpt.getOrElse(oldOpt.get.limit(0))
         val cols = (old0.columns ++ new0.columns.filterNot(old0.columns.contains)).toSeq
@@ -939,6 +894,26 @@ object MergeTable {
         case _              => None
       }
     } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** Additive schema evolution: null-fill the columns of `to` that `df`
+    * lacks (upsert's `evolveSchema`, the change feed across evolved
+    * versions).
+    */
+  private def widen(df: DataFrame, to: StructType): DataFrame =
+    to.fields.foldLeft(df) { (d, f) =>
+      if (d.columns.contains(f.name)) d
+      else d.withColumn(f.name, org.apache.spark.sql.functions.lit(null).cast(f.dataType))
+    }
+
+  /** Put `src` at `dst` as a hard link — O(1) metadata, no bytes moved —
+    * or as a copy where links are unsupported (e.g. across filesystems).
+    * A vanished `src` makes the copy throw `NoSuchFileException`, which
+    * carry-forward callers map to a commit conflict.
+    */
+  private[graft] def linkOrCopy(src: Path, dst: Path): Unit =
+    try Files.createLink(dst, src)
+    catch { case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
+      Files.copy(src, dst) }
 
   /** `v<n>` with a non-empty all-digit suffix. */
   def isVersionName(name: String): Boolean =

@@ -1,28 +1,25 @@
 package graft.stages
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The reference DAG (`dags/courier_ledger_dag.py:41-42`) as sequential
-  * stage functions over one SparkSession — load couriers/deliveries,
-  * STG→DDS normalization, fact load, ledger rebuild — with the watermark
-  * advanced only after a successful fact write (SURVEY.md §7.3 ordering).
-  *
-  * Tables are plain DataFrames in/out, storage-agnostic: the orchestrator
-  * (Airflow `SparkSubmitOperator` per stage in production, a single driver
-  * call in tests) decides where each layer persists. All stages are
-  * idempotent under replay because every write path flows through the
-  * [[Merge]] rewrites.
+/** The reference DAG's transformations (`dags/courier_ledger_dag.py:41-42`)
+  * as pure functions over DataFrames — STG→DDS normalization of one
+  * increment and the ledger rebuild. The one durable load that commits them
+  * is `PipelineMain.stgToDds` (one `spark-submit` per Airflow task), which
+  * advances the watermark only after a successful fact write (SURVEY.md
+  * §7.3 ordering). All stages are idempotent under replay because every
+  * write path flows through the [[Merge]] rewrites.
   *
   * The dims take delta rows only ([[prepareIncrement]]): this increment's
   * couriers (SCD1 upsert) and its new timestamps (SCD0 insert), ids given
-  * to those rows alone. The facts resolve against the dims once they hold
-  * those rows — the in-memory [[DdsState]] here, the committed dim
-  * versions in `PipelineMain.stgToDds`.
+  * to those rows alone. The facts resolve against the committed dim
+  * versions once those hold the increment's rows.
   */
 object Pipeline {
 
+  /** The DDS layer [[ledgerRebuild]] reads. */
   final case class DdsState(
       dmCouriers: DataFrame,   // id, courier_key, courier_name
       dmTimestamps: DataFrame, // id, ts, year, month, day, time, date
@@ -30,37 +27,8 @@ object Pipeline {
 
   val coldStartWatermark: Timestamp = Timestamp.valueOf("2022-01-01 00:00:00")
 
-  /** One incremental run's outcome: the updated DDS state, the advanced
-    * watermark (None if the increment was empty), the rows that failed
-    * the CHECK-constraint set — quarantined with their violation reasons
-    * instead of aborting the load (see [[Validate]]) — and `newFacts`,
-    * THIS increment's key-resolved fact rows alone.
-    */
-  final case class LoadResult(
-      dds: DdsState, watermark: Option[Timestamp], quarantined: DataFrame,
-      newFacts: DataFrame)
-
-  /** One incremental run: the courier/timestamp/fact loads of
-    * `couriers_stg_to_dds.sql` / `timestamps_stg_to_dds.sql` /
-    * `deliveries_stg_to_dds.sql` against the current DDS state.
-    *
-    * @param stgDeliveries raw STG rows (json_response, delivery_ts)
-    * @param stgCouriers   courier snapshot (courier_key, courier_name)
-    * @param watermark     last processed delivery_ts (strict >)
-    * @param dmOrders      pre-existing order dimension (order_key, id)
-    * @return updated DDS state + the new watermark (None if increment empty)
-    */
-  def incrementalLoad(stgDeliveries: DataFrame, stgCouriers: DataFrame,
-                      dmOrders: DataFrame, dds: DdsState,
-                      watermark: Timestamp): LoadResult =
-    // O3: watermark filter with a driver-resolved literal → parquet pushdown
-    incrementalLoadParsed(
-      StgToDds.parseDeliveries(
-        stgDeliveries.filter(col("delivery_ts") > lit(watermark))),
-      stgCouriers, dmOrders, dds)
-
-  /** One increment reduced to the rows it writes — what a storage-backed
-    * caller commits, so every commit's incoming side is O(increment):
+  /** One increment reduced to the rows it writes — what `stgToDds`
+    * commits, so every commit's incoming side is O(increment):
     *
     * @param deliveries the increment's CHECK-clean rows, still carrying
     *                   business keys (resolved against the dims by
@@ -71,48 +39,17 @@ object Pipeline {
     *                   an SCD1 upsert into the courier dim
     * @param timestamps the increment's NEW `ts` rows only, with ids: an
     *                   SCD0 insert into the timestamp dim
-    * @param watermark  the advanced cursor (None if the increment was empty)
     */
   final case class Increment(
       deliveries: DataFrame, quarantined: DataFrame,
-      couriers: DataFrame, timestamps: DataFrame,
-      watermark: Option[Timestamp])
-
-  /** [[incrementalLoad]] from an ALREADY-PARSED increment — for callers
-    * that materialize the parse at a stage boundary: the load runs several
-    * actions over this lineage, and without the boundary each one re-scans
-    * STG and re-runs from_json + the CHECK evaluation.
-    *
-    * The returned [[DdsState]] applies exactly the [[Increment]] rows that
-    * `PipelineMain.stgToDds` commits ([[prepareIncrement]]), so the
-    * in-memory and the durable load share one code path.
-    */
-  def incrementalLoadParsed(parsed: DataFrame, stgCouriers: DataFrame,
-                            dmOrders: DataFrame, dds: DdsState): LoadResult = {
-    val inc = prepareIncrement(parsed, stgCouriers, dds.dmCouriers, dds.dmTimestamps)
-    val dmCouriers1 = Merge.upsert(dds.dmCouriers, inc.couriers, Seq("courier_key"))
-    val dmTimestamps1 = Merge.insertIgnore(dds.dmTimestamps, inc.timestamps, Seq("ts"))
-    // J2 fact resolution + S5 insert-ignore on delivery_key
-    val facts = StgToDds.resolveFacts(inc.deliveries, dmOrders, dmTimestamps1, dmCouriers1)
-    val fct1 = Merge.insertIgnore(dds.fctDeliveries, facts, Seq("delivery_key"))
-    LoadResult(DdsState(dmCouriers1, dmTimestamps1, fct1), inc.watermark, inc.quarantined,
-      newFacts = facts)
-  }
+      couriers: DataFrame, timestamps: DataFrame)
 
   /** Split a parsed increment into the rows it writes ([[Increment]]),
     * giving dimension ids to THIS increment's rows only — the previous
     * dims are read for their ids and max id, never rewritten.
-    *
-    * @param maxTsHint the increment's max `ts`, when the caller already
-    *   knows it (e.g. observed on the stage-boundary write via
-    *   `Dataset.observe` — see `PipelineMain.stgToDds`). `Some(x)` skips
-    *   this function's cursor pass over `parsed` entirely; `None` keeps
-    *   the self-contained behavior. At 100 TB the saved pass is a full
-    *   scan of the increment.
     */
   def prepareIncrement(parsed: DataFrame, stgCouriers: DataFrame,
-                       dmCouriers: DataFrame, dmTimestamps: DataFrame,
-                       maxTsHint: Option[Option[Timestamp]] = None): Increment = {
+                       dmCouriers: DataFrame, dmTimestamps: DataFrame): Increment = {
     // S7 runtime CHECKs: violating rows are quarantined with reasons, not
     // loaded and not allowed to abort the batch (the reference's DDL CHECK
     // semantics, minus the Postgres batch abort)
@@ -129,12 +66,7 @@ object Pipeline {
         .join(dmTimestamps.select(col("ts")), Seq("ts"), "left_anti"),
       dmTimestamps, "ts")
 
-    // A1 cursor: only advance when the increment was non-empty. Quarantined
-    // rows DO advance it (they were read and dispositioned; re-reading them
-    // forever would wedge the pipeline on one bad record).
-    val watermark = maxTsHint.getOrElse(
-      State.tsValue(parsed.agg(max(col("ts"))).collect().head, 0))
-    Increment(newDeliveries, quarantined, couriers, timestamps, watermark)
+    Increment(newDeliveries, quarantined, couriers, timestamps)
   }
 
   /** Stable surrogate ids across replays: delta rows whose business key

@@ -124,28 +124,8 @@ object PipelineMain {
       .write.mode("overwrite").parquet(parsedDir)
     val incrementMaxTs = Option(obs.get("max_ts"))
       .map(_.asInstanceOf[java.sql.Timestamp])
-    // the guard's row count comes from the COMMITTED files' footers, not
-    // the observe metric: observed counts can skew under speculative /
-    // retried tasks (driver ADVICE), while footer counts describe exactly
-    // what the write landed. max_ts stays on observe — max is
-    // retry-insensitive, and re-deriving it would be a data scan.
-    // An unreadable footer reports rowCount = -1; summing that would
-    // UNDERCOUNT and could zero out the guard below, re-enabling the very
-    // data loss it prevents — so any unreadable footer makes the footer
-    // count unknown and the observe metric (an overcount at worst, which
-    // only makes the guard stricter) takes over.
-    val incrementRows = {
-      import scala.jdk.CollectionConverters._
-      val ls = java.nio.file.Files.list(java.nio.file.Paths.get(parsedDir))
-      val parts = try ls.iterator().asScala.filter { p =>
-        val n = p.getFileName.toString
-        !n.startsWith("_") && !n.startsWith(".") && java.nio.file.Files.isRegularFile(p)
-      }.toSeq finally ls.close()
-      val conf = spark.sessionState.newHadoopConf()
-      val counts = parts.map(p => graft.lake.FileStats.read(p, conf).rowCount)
-      if (counts.exists(_ < 0L)) obs.get("n_rows").asInstanceOf[Long]
-      else counts.sum
-    }
+    // observed counts only overcount rows that exist: 0 exactly when the write landed nothing
+    val incrementRows = obs.get("n_rows").asInstanceOf[Long]
     // read back with the parse schema, known before the write: no job to
     // infer it from a footer
     val parsed = spark.read.schema(parse.schema).parquet(parsedDir)
@@ -163,8 +143,7 @@ object PipelineMain {
           "pre-existing order dimension (PipelineMain.seedOrders) before loading facts")
     val inc = Pipeline.prepareIncrement(parsed,
       read(spark, warehouse, "stg/couriers", stgCourierSchema, "courier_key"),
-      dmCouriers.read(spark, dmCourierSchema), dmTimestamps.read(spark, dmTimestampSchema),
-      maxTsHint = Some(incrementMaxTs))
+      dmCouriers.read(spark, dmCourierSchema), dmTimestamps.read(spark, dmTimestampSchema))
     // dims first, merged by BUSINESS KEY with O(increment) incoming sides
     dmCouriers.upsert(inc.couriers)
     dmTimestamps.insertIgnore(inc.timestamps)
@@ -180,8 +159,11 @@ object PipelineMain {
       md5(to_json(struct(inc.quarantined.columns.map(col): _*))))
     if (!quarantined.isEmpty)
       t(warehouse, "dds/quarantine", "_q_key").upsert(quarantined)
-    // the cursor advances LAST — a crash above replays into idempotent merges
-    State.advanceWatermark(spark, s"$warehouse/state/wf", WorkflowKey, inc.watermark)
+    // the cursor advances LAST — a crash above replays into idempotent
+    // merges. It is the max `ts` of every parsed row, quarantined ones
+    // included: they were dispositioned, and re-reading them forever would
+    // wedge the pipeline on one bad record. An empty increment advances nothing.
+    State.advanceWatermark(spark, s"$warehouse/state/wf", WorkflowKey, incrementMaxTs)
   }
 
   /** `ledger_update`: DDS → CDM full recompute, upserted by the mart key. */

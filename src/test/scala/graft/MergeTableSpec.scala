@@ -133,14 +133,15 @@ class MergeTableSpec extends AnyFunSuite {
   test("compact rewrites the current version into fewer files with identical content") {
     import spark.implicits._
     val t = MergeTable.scratch(Seq("k"))
-    // fixture needs a MULTI-file starting table; commits size their output
-    // by default since r17 (OptimizeWrite rebalance), so opt out here —
-    // the contract under test is compact()'s, not the write sizing
-    spark.conf.set("graft.merge.optimizeWrite", "false")
-    try {
-      t.upsert((1 to 50).map(i => (s"k$i", i)).toDF("k", "v").repartition(8))
-      t.upsert((51 to 90).map(i => (s"k$i", i)).toDF("k", "v").repartition(8))
-    } finally spark.conf.unset("graft.merge.optimizeWrite")
+    // fixture needs a MULTI-file starting table; DataFrame commits size
+    // their output (OptimizeWrite rebalance), so stage 8 files and publish
+    // them directly — the contract under test is compact()'s, not the
+    // write sizing
+    t.upsert((1 to 50).map(i => (s"k$i", i)).toDF("k", "v"))
+    val staged = Paths.get(t.root, "_stage_spec")
+    (51 to 90).map(i => (s"k$i", i)).toDF("k", "v").repartition(8)
+      .write.parquet(staged.toString)
+    assert(t.commitStagedFiles(staged, carryForward = true) == "v1")
     val before = rows(t)
     def partFiles(version: String) =
       new java.io.File(Paths.get(t.root, version).toString).listFiles()
@@ -152,6 +153,26 @@ class MergeTableSpec extends AnyFunSuite {
     assert(rows(t) == before, "compaction must not change a single row")
     // the pre-compaction version is still time-travelable
     assert(t.readVersion(spark, "v1").count() == before.size)
+  }
+
+  test("an orphan deletion-vector sidecar from a dead writer never reaches a DataFrame commit") {
+    import spark.implicits._
+    val t = MergeTable.scratch(Seq("k"))
+    t.upsert(Seq(("a", 1)).toDF("k", "v"))                             // v0
+    // a merge-on-read UPDATE that died between assembling the NEXT
+    // version's sidecar and its flip leaves v1_dv (one positions file)
+    // for a version that was never published
+    Seq((t.dataFiles("v0").head.toString, 0L)).toDF("file", "pos").repartition(1)
+      .write.parquet(t.dvSidecarPath("v1").toString)
+    assert(t.pendingDeleteVectors.isEmpty)
+    t.upsert(Seq(("b", 2)).toDF("k", "v"))                             // v1
+    assert(t.currentVersion.contains("v1"))
+    assert(t.pendingDeleteVectors.isEmpty,
+      "the flip to v1 must not adopt the dead writer's sidecar")
+    // the next commit is not refused as if deletes were pending
+    t.upsert(Seq(("c", 3)).toDF("k", "v"))                             // v2
+    assert(rows(t) == Seq(("a", 1), ("b", 2), ("c", 3)))
+    assert(t.readWithDeletes(spark, new StructType()).count() == 3L)
   }
 
   test("two racing writers: one flip wins, the loser fails loudly with nothing committed") {

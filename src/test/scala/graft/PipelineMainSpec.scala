@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import graft.stages.PipelineMain
+import graft.stages.{Pipeline, PipelineMain}
 
 /** The spark-submit packaging (S8): each stage a separate invocation
   * sharing only durable MergeTable storage — the per-task contract of the
@@ -81,6 +81,13 @@ class PipelineMainSpec extends AnyFunSuite {
     val e = intercept[IllegalStateException](
       PipelineMain.runStage(spark, "stg_to_dds", wh, Some(src)))
     assert(e.getMessage.contains("dm_orders"))
+    // an EMPTY increment on an unseeded order dim has nothing to lose: no
+    // throw, and the cursor stays where it was
+    val emptyWh = graft.stages.TempDirs.scratch("graft_pm_seed_empty_wh_")
+    val emptySrc = graft.stages.TempDirs.scratch("graft_pm_seed_empty_src_")
+    writeSource(emptySrc, Seq("c1" -> "Ann"), Seq.empty)
+    Seq("load_stg", "stg_to_dds").foreach(PipelineMain.runStage(spark, _, emptyWh, Some(emptySrc)))
+    assert(watermarkOf(emptyWh) == Pipeline.coldStartWatermark)
   }
 
   private val stages = Seq("load_stg", "stg_to_dds", "ledger_update")
@@ -109,13 +116,80 @@ class PipelineMainSpec extends AnyFunSuite {
 
   private def watermarkOf(wh: String): Timestamp =
     graft.stages.State.readWatermark(spark, s"$wh/state/wf",
-      PipelineMain.WorkflowKey, graft.stages.Pipeline.coldStartWatermark)
+      PipelineMain.WorkflowKey, Pipeline.coldStartWatermark)
+
+  /** A committed table's current version (no rows when never committed). */
+  private def tableOf(wh: String, rel: String): org.apache.spark.sql.DataFrame =
+    new graft.stages.MergeTable(s"$wh/$rel", Seq.empty)
+      .read(spark, new org.apache.spark.sql.types.StructType())
 
   /** A committed table's rows, columns in name order, rows sorted. */
   private def contentOf(wh: String, rel: String): Seq[String] = {
-    val df = new graft.stages.MergeTable(s"$wh/$rel", Seq.empty)
-      .read(spark, new org.apache.spark.sql.types.StructType())
+    val df = tableOf(wh, rel)
     df.select(df.columns.sorted.map(col): _*).collect().map(_.toString).toSeq.sorted
+  }
+
+  test("two incremental runs: SCD0 facts, SCD1 couriers, watermark, ledger") {
+    val (wh, src) = twoDayFixture(Seq("load_stg", "stg_to_dds"))
+    assert(tableOf(wh, "dds/quarantine").count() == 0)
+    assert(watermarkOf(wh) == ts("2024-05-01 12:00:00"))
+    assert(tableOf(wh, "dds/fct_deliveries").count() == 2)
+    assert(tableOf(wh, "dds/dm_couriers").count() == 2)
+    def courier(key: String) =
+      tableOf(wh, "dds/dm_couriers").filter(col("courier_key") === key).collect().head
+    val c1IdBefore = courier("c1").getAs[Int]("id")
+
+    // day 2: re-delivers d2 (must be ignored), adds d3, renames c1 (SCD1)
+    writeDay2(src)
+    Seq("load_stg", "stg_to_dds").foreach(PipelineMain.runStage(spark, _, wh, Some(src)))
+    assert(watermarkOf(wh) == ts("2024-05-02 09:30:00"))
+    // d2 re-delivery filtered by watermark; d3 appended
+    assert(tableOf(wh, "dds/fct_deliveries").count() == 3)
+    // SCD1: c1 renamed, id stable
+    val c1 = courier("c1")
+    assert(c1.getAs[String]("courier_name") == "Ann Smith")
+    assert(c1.getAs[Int]("id") == c1IdBefore)
+
+    // empty increment: nothing changes, watermark does not advance
+    PipelineMain.runStage(spark, "stg_to_dds", wh, Some(src))
+    assert(watermarkOf(wh) == ts("2024-05-02 09:30:00"))
+    assert(tableOf(wh, "dds/fct_deliveries").count() == 3)
+
+    // ledger rebuild: c1 has d1 (100, rate 5) + d3 (300, rate 4) in May 2024
+    PipelineMain.runStage(spark, "ledger_update", wh, Some(src))
+    val ledger = tableOf(wh, "cdm/ledger")
+      .filter("settlement_year = 2024 AND settlement_month = 5")
+      .collect().map(r => r.getAs[String]("courier_name") -> r).toMap
+    val ann = ledger("Ann Smith")
+    assert(ann.getAs[Long]("orders_count") == 2L)
+    assert(ann.getAs[Double]("orders_total_sum") == 400.0)
+    assert(ann.getAs[Double]("rate_avg") == 4.5)
+    // avg 4.5 → 8% tier: 32 < 175*2 → floor 350; reward = 350 + 0.95*40
+    assert(ann.getAs[Double]("courier_order_sum") == 350.0)
+    assert(ann.getAs[Double]("courier_reward_sum") == 350.0 + 38.0)
+    val bob = ledger("Bob")
+    assert(bob.getAs[Double]("rate_avg") == 3.0)
+    assert(bob.getAs[Double]("courier_order_sum") == 100.0)  // 5% of 200 → floor 100
+  }
+
+  test("CHECK violations are quarantined with reasons, not loaded, and don't stall the watermark") {
+    val (wh, src) = twoDayFixture(day1Stages = Nil)
+    writeSource(src, Seq("c1" -> "Ann", "c2" -> "Bob"), Seq(
+      delivery("ok", "o1", "c1", "2024-06-01 10:00:00", 5, "100.00", "1.00"),
+      delivery("bad_rate", "o2", "c2", "2024-06-01 11:00:00", 9, "50.00", "0.00"),
+      delivery("bad_sum", "o3", "c1", "2024-06-01 12:00:00", 3, "-7.00", "0.00")))
+    Seq("load_stg", "stg_to_dds").foreach(PipelineMain.runStage(spark, _, wh, Some(src)))
+    // only the clean row loads
+    assert(tableOf(wh, "dds/fct_deliveries").collect()
+      .map(_.getAs[String]("delivery_key")).toSeq == Seq("ok"))
+    // the bad rows are inspectable with their reasons
+    val reasons = tableOf(wh, "dds/quarantine").collect()
+      .map(r => r.getAs[String]("delivery_key") ->
+        r.getAs[scala.collection.Seq[String]]("_violations").toSeq).toMap
+    assert(reasons("bad_rate") == Seq("rating_range"))
+    assert(reasons("bad_sum") == Seq("order_sum_non_negative"))
+    // quarantined rows were dispositioned: the cursor moves past them
+    assert(watermarkOf(wh) == ts("2024-06-01 12:00:00"))
   }
 
   test("three-stage spark-submit chain: two days, replay, durable state, ledger") {
@@ -181,22 +255,27 @@ class PipelineMainSpec extends AnyFunSuite {
   test("job budget: a daily stg_to_dds submits no schema-inference job and stays in budget") {
     val (wh, src) = twoDayFixture()
     writeDay2(src)
-    PipelineMain.runStage(spark, "load_stg", wh, Some(src))
-    val (_, jobs) = SparkJobs.during(spark)(
-      PipelineMain.runStage(spark, "stg_to_dds", wh, Some(src)))
+    val jobs = stages.map { stage =>
+      stage -> SparkJobs.during(spark)(PipelineMain.runStage(spark, stage, wh, Some(src)))._2
+    }.toMap
     // a job outside any SQL execution is one submitted only to infer a
-    // schema from a parquet footer
-    assert(jobs.forall(_.executionId.isDefined),
-      s"jobs outside a SQL execution: ${jobs.filter(_.executionId.isEmpty)}")
-    assert(jobs.size <= PipelineMainSpec.StgToDdsJobBudget,
-      s"${jobs.size} jobs > budget ${PipelineMainSpec.StgToDdsJobBudget}: ${jobs.map(_.callSite)}")
+    // schema from a parquet footer (load_stg infers its source snapshot's)
+    assert(jobs("stg_to_dds").forall(_.executionId.isDefined),
+      s"jobs outside a SQL execution: ${jobs("stg_to_dds").filter(_.executionId.isEmpty)}")
+    stages.foreach { stage =>
+      val budget = PipelineMainSpec.JobBudget(stage)
+      assert(jobs(stage).size <= budget,
+        s"$stage: ${jobs(stage).size} jobs > budget $budget: ${jobs(stage).map(_.callSite)}")
+    }
   }
 }
 
 object PipelineMainSpec {
-  /** Jobs one daily `stg_to_dds` may submit on the two-day fixture: the
-    * measured count (36) plus a 25% margin for plan changes across Spark
-    * patches. The full-state dim commits, re-running the dim lineages in the
-    * fact commit, or schema inference on each read each add 10+ jobs. */
-  val StgToDdsJobBudget: Int = 45
+  /** Jobs each daily stage may submit on the two-day fixture: the measured
+    * count (load_stg 9, stg_to_dds 36, ledger_update 10) plus a 25% margin
+    * for plan changes across Spark patches. The full-state dim commits,
+    * re-running the dim lineages in the fact commit, or schema inference on
+    * each read each add 10+ jobs to stg_to_dds. */
+  val JobBudget: Map[String, Int] =
+    Map("load_stg" -> 11, "stg_to_dds" -> 45, "ledger_update" -> 12)
 }
