@@ -699,6 +699,24 @@ final class MergeTable(val root: String, keys: Seq[String],
       else None
     }
 
+  /** Largest value of an integral `column` in a version, from the `_STATS`
+    * upper bounds — metadata, no data scan. Files without rows are
+    * skipped. `None` when the manifest is absent, any data file lacks an
+    * entry, any file holding rows has no integral upper bound for the
+    * column (all null, unreadable footer), or no file holds a row: the
+    * caller then scans.
+    */
+  def manifestMax(version: String, column: String): Option[Long] =
+    graft.lake.StatsManifest.read(Paths.get(root, version)).flatMap { m =>
+      val stats = dataFiles(version).map(f => m.get(f.getFileName.toString))
+      if (stats.exists(s => s.forall(_.rowCount < 0L))) None
+      else {
+        val bounds = stats.flatten.filter(_.rowCount > 0L).map(_.colStats(column).hiBound)
+        val highs = bounds.collect { case Some(hi: Long) => hi }
+        if (highs.isEmpty || highs.size < bounds.size) None else Some(highs.max)
+      }
+    }
+
   /** Row-level change feed (CDC) between two committed versions — what
     * Delta's Change Data Feed or an Iceberg changelog scan exposes,
     * derived here purely from version immutability, with no per-commit

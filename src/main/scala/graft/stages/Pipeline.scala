@@ -1,8 +1,10 @@
 package graft.stages
 
 import java.sql.Timestamp
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 /** The reference DAG's transformations (`dags/courier_ledger_dag.py:41-42`)
   * as pure functions over DataFrames — STG→DDS normalization of one
@@ -46,10 +48,12 @@ object Pipeline {
 
   /** Split a parsed increment into the rows it writes ([[Increment]]),
     * giving dimension ids to THIS increment's rows only — the previous
-    * dims are read for their ids and max id, never rewritten.
+    * dims are read for their ids, never rewritten. `maxCourierId` and
+    * `maxTimestampId` are the dims' current max ids (0 when empty).
     */
   def prepareIncrement(parsed: DataFrame, stgCouriers: DataFrame,
-                       dmCouriers: DataFrame, dmTimestamps: DataFrame): Increment = {
+                       dmCouriers: DataFrame, dmTimestamps: DataFrame,
+                       maxCourierId: Int, maxTimestampId: Int): Increment = {
     // S7 runtime CHECKs: violating rows are quarantined with reasons, not
     // loaded and not allowed to abort the batch (the reference's DDL CHECK
     // semantics, minus the Postgres batch abort)
@@ -58,30 +62,29 @@ object Pipeline {
     // S4/SCD1 courier dim: every courier of the increment, names as of the
     // snapshot; known keys keep their ids
     val couriers = withDimIds(
-      StgToDds.courierDimRows(newDeliveries, stgCouriers), dmCouriers, "courier_key")
+      StgToDds.courierDimRows(newDeliveries, stgCouriers)
+        .join(dmCouriers.select(col("courier_key"), col("id").as("_known_id")),
+          Seq("courier_key"), "left"),
+      col("_known_id"), "courier_key", maxCourierId).drop("_known_id")
 
-    // S5/SCD0 timestamp dim: only timestamps the dim has not seen
+    // S5/SCD0 timestamp dim: only timestamps the dim has not seen, so
+    // every row is new
     val timestamps = withDimIds(
       StgToDds.timestampDimRows(newDeliveries)
         .join(dmTimestamps.select(col("ts")), Seq("ts"), "left_anti"),
-      dmTimestamps, "ts")
+      lit(null).cast(IntegerType), "ts", maxTimestampId)
 
     Increment(newDeliveries, quarantined, couriers, timestamps)
   }
 
-  /** Stable surrogate ids across replays: delta rows whose business key
-    * already had an id keep it; genuinely new keys get ids after the
-    * current max in business-key order (the Spark stand-in for Postgres
-    * `serial`). `delta` must be unique per key.
+  /** Stable surrogate ids across replays, in one projection over `delta`
+    * (unique per key): a row whose `known` id is set keeps it; new keys get
+    * `maxId + row_number` in business-key order (the Spark stand-in for
+    * Postgres `serial`).
     */
-  private def withDimIds(delta: DataFrame, previous: DataFrame, key: String): DataFrame = {
-    val withOld = delta.join(previous.select(col(key), col("id")), Seq(key), "left")
-    val maxOld = previous.agg(coalesce(max(col("id")), lit(0))).collect().head.getInt(0)
-    val fresh = StgToDds.withSurrogateId(
-        withOld.filter(col("id").isNull).drop("id"), "id", col(key))
-      .withColumn("id", col("id") + maxOld)
-    withOld.filter(col("id").isNotNull).unionByName(fresh)
-  }
+  private def withDimIds(delta: DataFrame, known: Column, key: String, maxId: Int): DataFrame =
+    delta.withColumn("id", coalesce(known,
+      lit(maxId) + row_number().over(Window.partitionBy(known.isNull).orderBy(col(key)))))
 
   /** DDS→CDM: the full-recompute ledger rebuild
     * (`courier_ledger_update.sql`) — month from the ORDER's timestamp via

@@ -16,8 +16,9 @@ import org.apache.spark.sql.types._
   * commits, so a task retry resumes from the last committed version):
   *
   *   - `load_stg <warehouse> <sourceDir>` — land the source snapshot into
-  *     `stg/` (couriers SCD1, deliveries SCD0 on the business keys) — the
-  *     S1/S2 extraction boundary (a production deployment points this at
+  *     `stg/` (couriers SCD1, deliveries SCD0 on the business keys, the
+  *     two commits concurrent) — the S1/S2 extraction boundary (a
+  *     production deployment points this at
   *     [[graft.sources.PagedJsonSource]]; the driver corpus stands in
   *     here);
   *   - `stg_to_dds <warehouse>` — the watermark-incremental load
@@ -25,10 +26,14 @@ import org.apache.spark.sql.types._
   *     rows only (SCD1 courier upsert, SCD0 timestamp insert, stable
   *     surrogate ids), the facts are resolved against the dim versions
   *     just committed and insert-ignored, CHECK violations are
-  *     quarantined, and the cursor advances ONLY after the fact commit
-  *     (write-then-advance, SURVEY.md §7.3);
+  *     quarantined, and the cursor advances ONLY after the fact and
+  *     quarantine commits (write-then-advance, SURVEY.md §7.3);
   *   - `ledger_update <warehouse>` — the full-recompute
   *     [[Pipeline.ledgerRebuild]] upserted into `cdm/ledger`.
+  *
+  * Only the fact load depends on both dims: within a stage, every table
+  * that does not wait for another commits on its own thread
+  * ([[concurrently]]), where the reference runs its tasks as one chain.
   *
   * Layout: `stg/{couriers,deliveries}`, `dds/{dm_couriers, dm_timestamps,
   * dm_orders, fct_deliveries, quarantine}`, `cdm/ledger`, `state/wf` —
@@ -43,6 +48,9 @@ object PipelineMain {
   private val stgDeliverySchema = StructType(Seq(
     StructField("json_response", StringType), StructField("delivery_key", StringType),
     StructField("delivery_ts", TimestampType)))
+  // the source snapshot's deliveries (its couriers read as stgCourierSchema)
+  private val sourceDeliverySchema = StructType(Seq(
+    StructField("json_response", StringType), StructField("delivery_ts", TimestampType)))
   private val stgCourierSchema = StructType(Seq(
     StructField("courier_key", StringType), StructField("courier_name", StringType)))
   private val dmCourierSchema = StructType(Seq(
@@ -71,7 +79,9 @@ object PipelineMain {
 
   /** `load_stg`: land the source snapshot. Deliveries carry their business
     * key out of the payload so the SCD0 landing can dedup re-deliveries
-    * without parsing (`sql/DDL_stg.deliverysystem_deliveries.sql:12`).
+    * without parsing (`sql/DDL_stg.deliverysystem_deliveries.sql:12`). The
+    * snapshot is read with its declared schemas: no job infers them from a
+    * footer. The two landings share nothing and commit concurrently.
     *
     * A payload with NO extractable delivery_id gets a deterministic
     * surrogate key (`_malformed_<md5(payload)>`): the landing key must be
@@ -85,14 +95,15 @@ object PipelineMain {
     * aborting.
     */
   def loadStg(spark: SparkSession, warehouse: String, sourceDir: String): Unit = {
-    val couriers = spark.read.parquet(s"$sourceDir/couriers")
-    val deliveries = spark.read.parquet(s"$sourceDir/deliveries")
+    val couriers = spark.read.schema(stgCourierSchema).parquet(s"$sourceDir/couriers")
+    val deliveries = spark.read.schema(sourceDeliverySchema).parquet(s"$sourceDir/deliveries")
       .withColumn("delivery_key", coalesce(
         get_json_object(col("json_response"), "$.delivery_id"),
         concat(lit("_malformed_"), md5(col("json_response")))))
       .select(col("json_response"), col("delivery_key"), col("delivery_ts"))
-    t(warehouse, "stg/couriers", "courier_key").upsert(couriers)
-    t(warehouse, "stg/deliveries", "delivery_key").insertIgnore(deliveries)
+    concurrently(
+      () => t(warehouse, "stg/couriers", "courier_key").upsert(couriers),
+      () => t(warehouse, "stg/deliveries", "delivery_key").insertIgnore(deliveries))
   }
 
   /** `stg_to_dds`: one watermark increment against durable DDS state.
@@ -100,8 +111,17 @@ object PipelineMain {
     * Each piece of work runs once: the dims commit delta rows (never their
     * full state), and the facts resolve against the dim versions this run
     * committed — a read of those versions, not a re-run of the dim
-    * lineages. A crash between the commits replays safely: the dim merges
-    * are idempotent, so the re-run resolves the same ids.
+    * lineages. The scalar probes submit no job: the dims' max ids come
+    * from their `_STATS` bounds, and whether anything is quarantined rides
+    * the parse write as an observed count.
+    *
+    * Commit DAG, once the parse is written: the two dims and the
+    * quarantine commit concurrently; the facts commit once both dims have;
+    * the watermark advances once the facts and the quarantine have. A
+    * failure in any branch lets the others finish, then fails the stage
+    * with the cursor unmoved. Any subset of the concurrent commits may
+    * have landed by then; each is an idempotent merge, so the re-run
+    * converges to a clean run (the dims resolve the same ids).
     */
   def stgToDds(spark: SparkSession, warehouse: String): Unit = {
     val dmCouriers = t(warehouse, "dds/dm_couriers", "courier_key")
@@ -113,19 +133,23 @@ object PipelineMain {
     // the compact columns instead of re-scanning STG + re-running
     // from_json (the Validate.split caller contract)
     val parsedDir = TempDirs.scratch("graft_pm_parsed_")
-    // the watermark cursor and the increment size RIDE the write action
-    // (Dataset.observe): at 100 TB a separate agg(max)/isEmpty pass over
-    // the increment is a second full scan for two scalars
+    // the watermark cursor, the increment size and the CHECK violators
+    // RIDE the write action (Dataset.observe): at 100 TB a separate
+    // agg(max)/isEmpty pass over the increment is a second full scan for
+    // a scalar
     val obs = org.apache.spark.sql.Observation(s"parsed_increment_$WorkflowKey")
     val parse = StgToDds.parseDeliveries(
       read(spark, warehouse, "stg/deliveries", stgDeliverySchema, "delivery_key")
         .filter(col("delivery_ts") > lit(wm)))
-    parse.observe(obs, max(col("ts")).as("max_ts"), count(lit(1)).as("n_rows"))
+    val violates = Validate.deliveryChecks.map(Validate.violates).reduce(_ || _)
+    parse.observe(obs, max(col("ts")).as("max_ts"), count(lit(1)).as("n_rows"),
+        count(when(violates, true)).as("n_violating"))
       .write.mode("overwrite").parquet(parsedDir)
     val incrementMaxTs = Option(obs.get("max_ts"))
       .map(_.asInstanceOf[java.sql.Timestamp])
     // observed counts only overcount rows that exist: 0 exactly when the write landed nothing
     val incrementRows = obs.get("n_rows").asInstanceOf[Long]
+    val violatingRows = obs.get("n_violating").asInstanceOf[Long]
     // read back with the parse schema, known before the write: no job to
     // infer it from a footer
     val parsed = spark.read.schema(parse.schema).parquet(parsedDir)
@@ -141,29 +165,65 @@ object PipelineMain {
       throw new IllegalStateException(
         s"$warehouse/dds/dm_orders is empty but the increment is not — seed the " +
           "pre-existing order dimension (PipelineMain.seedOrders) before loading facts")
+    val couriersNow = dmCouriers.read(spark, dmCourierSchema)
+    val timestampsNow = dmTimestamps.read(spark, dmTimestampSchema)
     val inc = Pipeline.prepareIncrement(parsed,
       read(spark, warehouse, "stg/couriers", stgCourierSchema, "courier_key"),
-      dmCouriers.read(spark, dmCourierSchema), dmTimestamps.read(spark, dmTimestampSchema))
-    // dims first, merged by BUSINESS KEY with O(increment) incoming sides
-    dmCouriers.upsert(inc.couriers)
-    dmTimestamps.insertIgnore(inc.timestamps)
-    // facts resolve against exactly what was just committed, and commit
-    // ONLY this increment's rows
-    val newFacts = StgToDds.resolveFacts(inc.deliveries, dmOrders,
-      dmTimestamps.read(spark, dmTimestampSchema), dmCouriers.read(spark, dmCourierSchema))
-    t(warehouse, "dds/fct_deliveries", "delivery_key").insertIgnore(newFacts)
+      couriersNow, timestampsNow,
+      maxId(dmCouriers, couriersNow), maxId(dmTimestamps, timestampsNow))
     // quarantine idempotence cannot key on delivery_key (the rows this
     // table exists for may have it NULL): key on a deterministic row
     // digest so a crash-replay upserts, never duplicates
     val quarantined = inc.quarantined.withColumn("_q_key",
       md5(to_json(struct(inc.quarantined.columns.map(col): _*))))
-    if (!quarantined.isEmpty)
-      t(warehouse, "dds/quarantine", "_q_key").upsert(quarantined)
+    concurrently(
+      () => {
+        // dims merged by BUSINESS KEY with O(increment) incoming sides
+        concurrently(
+          () => dmCouriers.upsert(inc.couriers),
+          () => dmTimestamps.insertIgnore(inc.timestamps))
+        // facts resolve against exactly what was just committed, and
+        // commit ONLY this increment's rows
+        t(warehouse, "dds/fct_deliveries", "delivery_key").insertIgnore(
+          StgToDds.resolveFacts(inc.deliveries, dmOrders,
+            dmTimestamps.read(spark, dmTimestampSchema), dmCouriers.read(spark, dmCourierSchema)))
+      },
+      () => if (violatingRows > 0) t(warehouse, "dds/quarantine", "_q_key").upsert(quarantined))
     // the cursor advances LAST — a crash above replays into idempotent
     // merges. It is the max `ts` of every parsed row, quarantined ones
     // included: they were dispositioned, and re-reading them forever would
     // wedge the pipeline on one bad record. An empty increment advances nothing.
     State.advanceWatermark(spark, s"$warehouse/state/wf", WorkflowKey, incrementMaxTs)
+  }
+
+  /** A dim's largest `id` (0 when empty): the `_STATS` upper bound of the
+    * version `dim` reads, a scan when the manifest cannot answer.
+    */
+  private[graft] def maxId(table: MergeTable, dim: DataFrame): Int =
+    table.currentVersion.fold(0)(v => table.manifestMax(v, "id").map(_.toInt).getOrElse(
+      dim.agg(coalesce(max(col("id")), lit(0))).collect().head.getInt(0)))
+
+  /** Runs `branches` concurrently and waits for every one of them, even
+    * after one fails; then throws the first failure in argument order with
+    * the others attached as suppressed. Each branch runs on a thread
+    * created for this call, so it inherits the caller's Spark local
+    * properties (job group, scheduler pool, tracing tags) — threads of a
+    * pool created earlier would not, and their jobs would escape the
+    * caller's accounting.
+    */
+  private[graft] def concurrently(branches: (() => Unit)*): Unit = {
+    val failures = new Array[Throwable](branches.size)
+    val threads = branches.zipWithIndex.map { case (branch, i) =>
+      val th = new Thread(() => try branch() catch { case e: Throwable => failures(i) = e },
+        s"graft-branch-$i")
+      th.start()
+      th
+    }
+    threads.foreach(_.join())
+    failures.filter(_ != null) match {
+      case Array(first, others @ _*) => others.foreach(first.addSuppressed); throw first
+      case _                         => ()
+    }
   }
 
   /** `ledger_update`: DDS → CDM full recompute, upserted by the mart key. */

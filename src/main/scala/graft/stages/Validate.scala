@@ -43,10 +43,14 @@ object Validate {
     */
   def flag(df: DataFrame, checks: Seq[Check]): DataFrame = {
     require(checks.nonEmpty, "validate with no checks is a no-op; declare at least one")
-    val violations = array(checks.map(c =>
-      when(c.predicate <=> lit(false), lit(c.name))): _*)
+    val violations = array(checks.map(c => when(violates(c), lit(c.name))): _*)
     df.withColumn("_violations", filter(violations, _.isNotNull))
   }
+
+  /** True exactly for the rows [[flag]] quarantines under `c`: the
+    * predicate is FALSE (NULL passes).
+    */
+  def violates(c: Check): Column = c.predicate <=> lit(false)
 
   /** The reference's delivery-fact invariants as a reusable check set
     * (rate 1–5, non-negative money, present keys).

@@ -449,6 +449,32 @@ class LakeSpec extends AnyFunSuite {
     assert(sql(s"SELECT count(*), max(k) FROM $t").collect().head.toSeq == Seq(25L, 99L))
   }
 
+  test("DV eligibility counts live hits: rows a pending sidecar already deleted do not count against the cap") {
+    val t = freshTable(); val tn = n
+    val mt = new graft.stages.MergeTable(
+      Paths.get(spark.conf.get("spark.sql.catalog.lakespec.warehouse"),
+        "db", s"t$tn").toString, Seq.empty)
+    sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +
+      s"TBLPROPERTIES ('${graft.lake.GraftTable.DvDeleteMaxRowsProp}' = '10')")
+    for (b <- 0 until 4)
+      sql(s"INSERT INTO $t SELECT id, id FROM range(${b * 25}, ${(b + 1) * 25}, 1, 1)")
+    assert(mt.currentVersion.contains("v3"))
+    // 8 straddling rows ≤ cap 10: the sidecar, no commit
+    sql(s"DELETE FROM $t WHERE k >= 30 AND k < 38")
+    assert(mt.currentVersion.contains("v3") && mt.pendingDeleteVectors.isDefined)
+    // 11 bare hits, but 8 of them are already deleted: 3 live hits ≤ cap,
+    // so this delete also goes to the sidecar instead of the blocked rewrite
+    val plan = sql(s"EXPLAIN DELETE FROM $t WHERE k >= 30 AND k < 41")
+      .collect().head.getString(0)
+    assert(plan.contains("DeleteFromTable") && !plan.contains("ReplaceData"),
+      s"3 live hits must plan through SupportsDelete (DV):\n$plan")
+    sql(s"DELETE FROM $t WHERE k >= 30 AND k < 41")
+    assert(mt.currentVersion.contains("v3"), "a DV delete commits no version")
+    assert(sql(s"SELECT count(*) FROM $t").collect().head.getLong(0) == 89L)
+    assert(sql(s"SELECT count(*) FROM $t WHERE k >= 30 AND k < 41")
+      .collect().head.getLong(0) == 0L)
+  }
+
   test("pending-DV scan forwards query filters to the delegated parquet scan") {
     val t = freshTable(); val tn = n
     val mt = new graft.stages.MergeTable(
