@@ -27,15 +27,23 @@ import org.apache.spark.sql.SparkSession
   * rollup (`others_n`/`others_sum`) for the rest — while the complete
   * per-query map (min + spread per query) is written to
   * `BENCH_DETAIL.json` next to the build for readers who want every row.
+  *
+  * Every sample runs under [[Measure.during]], and the detail file records
+  * the counters (jobs, tasks, task/CPU/GC time, scan, shuffle, spill and
+  * write bytes) of the sample that gave each reported min, beside the
+  * host's `cpus`. Counters do not drift with the shared host the way walls
+  * do, so a narrowed run compares a change structurally:
+  * `SPARK_GRAFT_ONLY=a,b SPARK_GRAFT_REPS=1 runMain graft.Bench`.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val slots = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Runtime.getRuntime.availableProcessors
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt)
     val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .master(s"local[$slots]")
+      .config("spark.sql.shuffle.partitions", slots)
       .config("spark.ui.enabled", "false")
       // AQE eagerly renders the FULL physical-plan string on every stage
       // update (SparkListenerSQLAdaptiveExecutionUpdate) even with the UI
@@ -61,14 +69,12 @@ object Bench {
       org.apache.logging.log4j.Level.ERROR)
 
     val t0 = System.nanoTime()
-    locally {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      import ExecutionContext.Implicits.global
-      val warms = Tables.names.map(n =>
-        Future { Tables.load(spark, sfDir, n).cache().count() })
-      warms.foreach(Await.result(_, Duration.Inf))
-    }
+    // branch threads started inside the span inherit it, so the warm-up's
+    // jobs are counted like any query's
+    val warmCounters = Measure.during(spark, "cache_warm") {
+      stages.PipelineMain.concurrently(Tables.names.map(n =>
+        () => { Tables.load(spark, sfDir, n).cache().count(); () }): _*)
+    }._2.counters
     val warm = (System.nanoTime() - t0) / 1e9
 
     // SPARK_GRAFT_ONLY=a,b narrows the pass for single-query iteration,
@@ -77,19 +83,25 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val queries = only.fold(SparkEntry.queries)(s => SparkEntry.queries.filter(kv => s(kv._1)))
 
-    def timeOne(name: String): Double = {
-      val t = System.nanoTime()
-      val ok = try { queries(name)(spark, sfDir).count(); true }
-               catch { case _: Throwable => false }
-      if (ok) (System.nanoTime() - t) / 1e9 else -1.0
-    }
-    def onePass(): Seq[(String, Double)] =
+    /** One sample: wall seconds (-1 on failure) and the sample's counters. */
+    type Sample = (Double, Option[Measure.Counters])
+    def timeOne(name: String): Sample =
+      try {
+        val (wall, report) = Measure.during(spark, name) {
+          val t = System.nanoTime()
+          queries(name)(spark, sfDir).count()
+          (System.nanoTime() - t) / 1e9
+        }
+        (wall, Some(report.counters))
+      } catch { case _: Throwable => (-1.0, None) }
+    def onePass(): Seq[(String, Sample)] =
       queries.keys.toSeq.map(n => n -> timeOne(n))
 
     val runs = (1 to reps).map(_ => onePass().toMap)
     val names = runs.head.keys.toSeq.sorted
-    var samples: Map[String, Seq[Double]] =
+    var samples: Map[String, Seq[Sample]] =
       names.map(n => n -> runs.map(_(n))).toMap
+    def walls(n: String): Seq[Double] = samples(n).map(_._1)
 
     // Adaptive stabilization (r13 lesson: the MergeTable-heavy release
     // chain queries swing 8-13 s between reps on scratch-dir I/O, and
@@ -98,12 +110,14 @@ object Bench {
     // max(30% of min, 1 s) gets up to 2 extra solo reps; the reported
     // number is the min over ALL samples and `spread` is the gap between
     // the two BEST samples — i.e. how reproducible the reported min is,
-    // not how bad the worst contended rep was.
-    def bestTwoGap(ts: Seq[Double]): Double = {
-      val s = ts.sorted; s(1) - s(0)
+    // not how bad the worst contended rep was. A single sample (REPS=1)
+    // has no gap; `n_samples` shows that.
+    def bestTwoGap(ts: Seq[Double]): Double = ts.sorted match {
+      case a +: b +: _ => b - a
+      case _           => 0.0
     }
     def noisy(n: String): Boolean = {
-      val ts = samples(n)
+      val ts = walls(n)
       ts.forall(_ >= 0) && ts.size >= 2 &&
         bestTwoGap(ts) > math.max(0.3 * ts.min, 1.0)
     }
@@ -114,14 +128,18 @@ object Bench {
     }
 
     val best = names.map { n =>
-      val ts = samples(n)
+      val ts = walls(n)
       // any failed rep taints the query: report the failure, not a min
       n -> (if (ts.exists(_ < 0)) -1.0 else ts.min)
+    }
+    // the counters of the sample that gave the reported min
+    val bestCounters = names.collect { case n if walls(n).forall(_ >= 0) =>
+      n -> samples(n).minBy(_._1)._2.get
     }
     // a failed rep keeps the -1 sentinel in spread too: 0.0 would make an
     // erroring query indistinguishable from a perfectly stable one
     val spread = names.map { n =>
-      val ts = samples(n)
+      val ts = walls(n)
       n -> (if (ts.exists(_ < 0)) -1.0 else bestTwoGap(ts))
     }.toMap
     def r3(v: Double): String =
@@ -145,13 +163,16 @@ object Bench {
     // `value_normalized` = value / host_factor ≈ what this run would have
     // measured on the anchor window's host. Anchors are sf0.1 figures, so
     // the factor is only computed there (1.0 elsewhere and on narrowed
-    // runs missing the probes).
+    // runs missing the probes), and only on a host with the anchors' CPU
+    // count: a 4-core window divided by 32-core anchors measures the
+    // hardware, not the drift.
+    val anchorCpus = 32
     val probeAnchors = Map( // r16 anchor window (BENCH_DETAIL @ b6ad785)
       "cache_warm" -> 7.266, "a3_pricing_summary" -> 0.300,
       "o4_distinct_projection" -> 0.235, "set_ops" -> 0.561)
     val bestMap = best.toMap
     val probeRatios =
-      if (!sfDir.replaceAll("/+$", "").endsWith("sf0.1")) Nil
+      if (cpus != anchorCpus || !sfDir.replaceAll("/+$", "").endsWith("sf0.1")) Nil
       else probeAnchors.toSeq.flatMap { case (n, anchor) =>
         val v = if (n == "cache_warm") warm else bestMap.getOrElse(n, -1.0)
         if (v > 0) Some(v / anchor) else None
@@ -171,12 +192,19 @@ object Bench {
     // comparing across queries/rounds can see exactly where that applies)
     val nSamples = names
       .map(n => s"\"$n\":${samples(n).size}").mkString("{", ",", "}")
+    // counts and bytes as integers, seconds like the walls
+    def countersJson(c: Measure.Counters): String = c.values.map { case (k, v) =>
+      s"\"$k\":" + (if (k.endsWith("_s")) r3(v) else v.toLong.toString)
+    }.mkString("{", ",", "}")
+    val counters = (Seq("cache_warm" -> warmCounters) ++ bestCounters)
+      .map { case (n, c) => s"\"$n\":${countersJson(c)}" }.mkString("{", ",", "}")
+    val failed = best.count(_._2 < 0)
     val detail = s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
       s""""host_factor":${r3(hostFactor)},"value_normalized":${r3(valueNorm)},""" +
-      s""""host_anchor":"r16_sf0.1",""" +
+      s""""host_anchor":"r16_sf0.1","cpus":$cpus,"failed":$failed,""" +
       s""""reps":$reps,"queries":${jsonMap(Seq("cache_warm" -> warm) ++ best)},""" +
       s""""spread":${jsonMap(spread.toSeq.sortBy(_._1))},""" +
-      s""""n_samples":$nSamples,"sf":"$sfDir"}"""
+      s""""n_samples":$nSamples,"counters":$counters,"sf":"$sfDir"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
       (detail + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
@@ -187,7 +215,7 @@ object Bench {
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","reps":$reps,""" +
       s""""host_factor":${r3(hostFactor)},"value_normalized":${r3(valueNorm)},""" +
       s""""queries":$qs,"others_n":${rest.size},"others_sum":${r3(rest.map(_._2).filter(_ >= 0).sum)},""" +
-      s""""failed":${best.count(_._2 < 0)},"spread_max":${r3(spreadMax)},""" +
+      s""""failed":$failed,"spread_max":${r3(spreadMax)},""" +
       s""""detail":"$detailPath","sf":"$sfDir"}""")
     spark.stop()
   }

@@ -482,32 +482,35 @@ final class MergeTable(val root: String, keys: Seq[String],
     * through [[commitStagedFiles]] — THE lock + compare-and-swap + move +
     * flip every version goes through. The base read here is the CAS
     * expectation, so a writer that flipped since fails this commit loudly
-    * with nothing committed.
+    * with nothing committed. Its jobs run under the span
+    * `commit:<table dir>` ([[graft.Measure]]).
     */
   private def commit(batch: DataFrame, expectedBase: Option[Option[String]] = None,
                      foldsPendingDeletes: Boolean = false,
                      sizeOutput: Boolean = true)
                     (merge: Option[DataFrame] => DataFrame): Unit = {
     val spark = batch.sparkSession
-    // an expected base makes the CAS cover the CALLER's read, not just this call
-    val base = expectedBase.getOrElse(currentVersion)
-    // refuse to advance past unreconciled merge-on-read deletes BEFORE any
-    // Spark work: the new version would start sidecar-free and resurrect
-    // them (only the reconcile itself, which folds the sidecar, may pass)
-    if (!foldsPendingDeletes) requireNoPendingDeletes(base)
-    val stage = Paths.get(root, s"_stage_${java.util.UUID.randomUUID()}")
-    val out0 = merge(base.map(scanVersion(spark, _)))
-    // OptimizeWrite (the Delta convention): an AQE REBALANCE before the
-    // write sizes the version's files by bytes, not by the merge lineage's
-    // incidental partition count (one file for a small table instead of 32
-    // writer-inits; still parallel, size-split at scale). Callers that
-    // partition their output DELIBERATELY (compact's file count /
-    // clustering, reconcileDeletes' numFiles) pass sizeOutput = false.
-    val out = if (sizeOutput) out0.hint("rebalance") else out0
-    out.write.mode("overwrite").parquet(stage.toString)
-    MergeTable.recordSchema(stage, out.schema)
-    commitStagedFiles(stage, carryForward = false, expectedBase = Some(base),
-      foldsPendingDeletes = foldsPendingDeletes)
+    graft.Measure.span(spark, s"commit:${Paths.get(root).getFileName}") {
+      // an expected base makes the CAS cover the CALLER's read, not just this call
+      val base = expectedBase.getOrElse(currentVersion)
+      // refuse to advance past unreconciled merge-on-read deletes BEFORE any
+      // Spark work: the new version would start sidecar-free and resurrect
+      // them (only the reconcile itself, which folds the sidecar, may pass)
+      if (!foldsPendingDeletes) requireNoPendingDeletes(base)
+      val stage = Paths.get(root, s"_stage_${java.util.UUID.randomUUID()}")
+      val out0 = merge(base.map(scanVersion(spark, _)))
+      // OptimizeWrite (the Delta convention): an AQE REBALANCE before the
+      // write sizes the version's files by bytes, not by the merge lineage's
+      // incidental partition count (one file for a small table instead of 32
+      // writer-inits; still parallel, size-split at scale). Callers that
+      // partition their output DELIBERATELY (compact's file count /
+      // clustering, reconcileDeletes' numFiles) pass sizeOutput = false.
+      val out = if (sizeOutput) out0.hint("rebalance") else out0
+      out.write.mode("overwrite").parquet(stage.toString)
+      MergeTable.recordSchema(stage, out.schema)
+      commitStagedFiles(stage, carryForward = false, expectedBase = Some(base),
+        foldsPendingDeletes = foldsPendingDeletes)
+    }
   }
 
   /** THE publish step: the data files in `staged` (plus any `_` sidecars

@@ -336,11 +336,11 @@ class MergeTableSpec extends AnyFunSuite {
     assert(MergeTable.recordedSchema(Paths.get(t.root, "v4")).get.fieldNames.toSeq ==
       Seq("k", "v", "w"))
     // opening a recorded version submits no Spark job (no footer inference)
-    val (_, jobs) = SparkJobs.during(spark) {
+    val (_, reads) = Measure.during(spark, "read_versions") {
       t.read(spark, new StructType())
       versions.foreach(t.readVersion(spark, _))
     }
-    assert(jobs.isEmpty, s"reads of recorded versions submitted jobs: $jobs")
+    assert(reads.jobs.isEmpty, s"reads of recorded versions submitted jobs: ${reads.jobs}")
     assert(t.readVersion(spark, "v4").orderBy("k").collect().map(r =>
       (r.getString(0), r.getInt(1), Option(r.getString(2)))).toSeq ==
       Seq(("b", 2, None), ("c", 3, None), ("d", 4, Some("x"))))
@@ -355,7 +355,7 @@ class MergeTableSpec extends AnyFunSuite {
     Seq(("c", 3)).toDF("k", "v").write.parquet(staged.toString)
     assert(t.commitStagedFiles(staged, carryForward = true) == "v1")
     assert(MergeTable.recordedSchema(Paths.get(t.root, "v1")).isEmpty)
-    val (_, inferJobs) = SparkJobs.during(spark)(t.read(spark, new StructType()))
+    val inferJobs = Measure.during(spark, "infer")(t.read(spark, new StructType()))._2.jobs
     assert(inferJobs.nonEmpty && inferJobs.forall(_.executionId.isEmpty),
       s"a version without _SCHEMA is opened by footer inference: $inferJobs")
     assert(rows(t) == Seq(("a", 1), ("b", 2), ("c", 3)))

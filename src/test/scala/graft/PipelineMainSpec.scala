@@ -315,10 +315,10 @@ class PipelineMainSpec extends AnyFunSuite {
     val v = t.currentVersion.get
     assert(t.manifestMax(v, "id").contains(7L))
     val dim = t.read(spark, new org.apache.spark.sql.types.StructType())
-    val (viaStats, jobs) = SparkJobs.during(spark)(PipelineMain.maxId(t, dim))
+    val (viaStats, probe) = Measure.during(spark, "max_id")(PipelineMain.maxId(t, dim))
     assert(viaStats == dim.agg(org.apache.spark.sql.functions.max("id")).collect().head.getInt(0))
     assert(viaStats == 7)
-    assert(jobs.isEmpty, s"a covered max id submits no job: $jobs")
+    assert(probe.jobs.isEmpty, s"a covered max id submits no job: ${probe.jobs}")
 
     // no manifest: the scan answers
     java.nio.file.Files.delete(java.nio.file.Paths.get(t.root, v, graft.lake.StatsManifest.FileName))
@@ -339,21 +339,26 @@ class PipelineMainSpec extends AnyFunSuite {
   test("job budget: a daily stg_to_dds submits no schema-inference job and stays in budget") {
     val (wh, src) = twoDayFixture()
     writeDay2(src)
-    val jobs = stages.map { stage =>
-      stage -> SparkJobs.during(spark)(PipelineMain.runStage(spark, stage, wh, Some(src)))._2
+    val reports = stages.map { stage =>
+      stage -> Measure.during(spark, stage)(PipelineMain.runStage(spark, stage, wh, Some(src)))._2
     }.toMap
     stages.foreach { stage =>
-      // a job outside the block's group escaped the caller's accounting (a
-      // branch thread that did not inherit its local properties); a job
-      // outside any SQL execution only infers a schema from a footer
-      assert(jobs(stage).forall(_.inGroup),
-        s"$stage: jobs outside the caller's group: ${jobs(stage).filterNot(_.inGroup)}")
-      assert(jobs(stage).forall(_.executionId.isDefined),
-        s"$stage: jobs outside a SQL execution: ${jobs(stage).filter(_.executionId.isEmpty)}")
+      val jobs = reports(stage).jobs
+      // an untagged job escaped the caller's accounting (a branch thread
+      // that did not inherit its local properties); a job outside any SQL
+      // execution only infers a schema from a footer
+      assert(jobs.forall(_.tagged), s"$stage: untagged jobs: ${jobs.filterNot(_.tagged)}")
+      assert(jobs.forall(_.executionId.isDefined),
+        s"$stage: jobs outside a SQL execution: ${jobs.filter(_.executionId.isEmpty)}")
       val budget = PipelineMainSpec.JobBudget(stage)
-      assert(jobs(stage).size <= budget,
-        s"$stage: ${jobs(stage).size} jobs > budget $budget: ${jobs(stage).map(_.callSite)}")
+      // the jobs per commit name where a regression is
+      val byChild = reports(stage).children.toSeq.sortBy(_._1)
+        .map { case (child, c) => s"$child=${c.jobs}" }.mkString(", ")
+      assert(jobs.size <= budget, s"$stage: ${jobs.size} jobs > budget $budget " +
+        s"(per commit: $byChild): ${jobs.map(_.callSite)}")
     }
+    assert(Set("commit:dm_couriers", "commit:dm_timestamps", "commit:fct_deliveries")
+      .subsetOf(reports("stg_to_dds").children.keySet), reports("stg_to_dds").children)
   }
 }
 

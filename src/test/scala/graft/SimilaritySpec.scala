@@ -885,11 +885,11 @@ class SimilaritySpec extends AnyFunSuite {
     val (centT, nodeT, adjT, metaT) = (scr("c_id"), scr("vec_id"), scr("src"), scr("key"))
     Similarity.graphIndexBuild(spark, walkEmb, centT, nodeT, adjT, metaT,
       centroidIdBound = 11, degree = degree)
-    def search(rounds: Int) = SparkJobs.during(spark)(
+    def search(rounds: Int) = Measure.during(spark, "graphIndexSearch")(
       Similarity.graphIndexSearch(spark, walkEmb, centT, nodeT, adjT, metaT,
-        nq, k, beam, rounds).collect())._2
+        nq, k, beam, rounds).collect())._2.jobs
     // the scoring collect is the one Similarity collect site that repeats
-    def scoringJobs(jobs: Seq[SparkJobs.Job]) =
+    def scoringJobs(jobs: Seq[Measure.Job]) =
       jobs.filter(_.callSite.startsWith("collect at Similarity.scala"))
         .groupBy(_.callSite).values.map(_.size).max
     val jobs = search(rounds)
